@@ -5,9 +5,9 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": ..., "turns_per_sec": ...}
 
 Set SPARK_GRAFT_BENCH_RUNS>1 to take the min over repeated runs (first
-run pays JVM/codegen warmup). The scaling-efficiency evidence for the
-north rule (local[8] vs local[32]) lives in BENCH/scaling.py which
-invokes this module's timing core at two parallelism levels.
+run pays JVM/codegen warmup). This is a quick per-query timer; the
+seeded end-to-end benchmark with per-layer metrics (including
+``scaling.eff_1_to_n``) is ``perfbench/run.py``.
 """
 
 from __future__ import annotations
@@ -51,63 +51,15 @@ HEADLINE = [
     "recombine",
     "conv_text_digest",
     "ottl_transform",
-    "dedup_minhash_lsh",
-    "pack_sequences",
-    "dedup_embedding_pairs",
-    "ann_cosine_topk",
-    "text_stats",
     "ottl_extended",
     "otlpjson_envelope",
-    "ann_ivf_topk",
-    "repetition_signals",
-    "decontamination",
-    "semdedup",
-    "dsir_weights",
-    "span_dedup",
-    "corpus_dag",
 ]
-
-#: the 19 queries benched since round 3 — their subtotal is emitted as
-#: ``comparable_19_total`` so cross-round comparison (r3 36.30s,
-#: r4 33.93s on this subset) needs no manual arithmetic. The three
-#: round-4 additions (pack_sequences, ann_ivf_topk, repetition_signals)
-#: are excluded by construction, as are the round-5 additions
-#: (decontamination, semdedup, dsir_weights).
-COMPARABLE_19 = [n for n in HEADLINE if n not in (
-    "pack_sequences", "ann_ivf_topk", "repetition_signals",
-    "decontamination", "semdedup", "dsir_weights", "span_dedup",
-    "corpus_dag")]
-
-
-def _exec(df) -> int:
-    """Force full execution without driver-side materialization."""
-    return df.write.format("noop").mode("overwrite").save() or df.count()
 
 
 def run_bench(spark: SparkSession, sf_dir: str, names=None) -> dict[str, float]:
     import __spark_entry__ as e
 
-    qs = dict(e.queries())
-    # bench-only twin: the Arrow parse path is pytest-proven equal to
-    # parse_regex and no longer occupies a driver-checked query slot,
-    # but its JVM-vs-Arrow timing comparison stays a headline number
-    qs.setdefault("parse_regex_arrow", e.q_parse_regex_arrow)
-    # the driver-board ann_ivf_topk runs at nprobe == nlist (full probe,
-    # oracle-replayable); the BENCH number stays the honest ANN setting
-    # (nprobe=4 < nlist=16) and comparable with rounds 3-4
-    qs["ann_ivf_topk"] = e.q_ann_ivf_bench
-    # the board folded brute+LSH top-k into one tagged union (ann_topk);
-    # the BENCH number stays the standalone brute-force query so the
-    # cross-round comparable subtotal keeps its meaning
-    qs.setdefault("ann_cosine_topk", e.q_ann_cosine_topk)
-    # the board folded lang_id into text_stats in round 5; the BENCH
-    # number stays the round-3/4 scope (no lang_id) so the
-    # comparable_19_total subtotal times an identical query each round
-    qs["text_stats"] = e.q_text_stats_bench
-    # bench-only: C4 span dedup is pytest-oracle-checked, not a board row
-    qs.setdefault("span_dedup", e.q_span_dedup)
-    # bench-only: the composed declarative corpus-prep DAG end-to-end
-    qs.setdefault("corpus_dag", e.q_corpus_dag)
+    qs = e.queries()
     names = [n for n in (names or HEADLINE) if n in qs]
     times: dict[str, float] = {}
     for name in names:
@@ -143,9 +95,6 @@ def main() -> None:
             for k, v in t.items():
                 best[k] = min(best.get(k, float("inf")), v)
         total = round(sum(best.values()), 3)
-        comparable = round(
-            sum(best[n] for n in COMPARABLE_19 if n in best), 3
-        )
         # end-to-end pipeline throughput: turns/sec through the flagship
         flagship = best.get("route_per_sink_counts", total)
         print(
@@ -154,7 +103,6 @@ def main() -> None:
                     "metric": "headline_queries_total",
                     "value": total,
                     "unit": "sec",
-                    "comparable_19_total": comparable,
                     "queries": best,
                     "sf": sf_dir,
                     "cpus": cpus,

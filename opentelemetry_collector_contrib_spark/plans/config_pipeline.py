@@ -394,48 +394,6 @@ def _stage_decontaminate(df, spark, sf_dir, cfg):
     )
 
 
-def _stage_semdedup(df, spark, sf_dir, cfg):
-    """Drop near-duplicate embeddings within coarse clusters
-    (functions/similarity.py:semdedup). Requires the embedding column
-    on the flowing frame (join it upstream with an ``enrich`` stage or
-    carry it from the source)."""
-    from ..functions import similarity as sim
-
-    id_col = cfg.get("id_col", "doc_id")
-    vec_col = cfg.get("vec_col", "embedding")
-    if vec_col not in df.columns:
-        raise ValueError(
-            f"semdedup stage needs column {vec_col!r} on the frame; "
-            f"have {df.columns}"
-        )
-    cluster = (
-        sim.lsh_bucket(vec_col, planes=cfg["planes"])
-        if "planes" in cfg else None
-    )
-    src = df
-    if cluster is None and cfg.get("centroids") is None:
-        # the IVF quantizer trains EAGERLY (a seed-sample collect plus
-        # one assignment pass per Lloyd iteration) — over the
-        # un-materialized flowing frame each pass would re-execute the
-        # whole upstream stage DAG at build time. Materialize the
-        # narrow (id, vec) projection once; training and the dedup
-        # probe both read it, and survivors semi-join back to the full
-        # frame by id. Lifetime: the returned plan references the
-        # checkpointed blocks, so they live exactly as long as the
-        # caller holds the result frame and are released by the
-        # ContextCleaner when it drops — an explicit unpersist here
-        # would pull the data out from under the un-executed plan.
-        src = df.select(id_col, vec_col).localCheckpoint(eager=True)
-    kept = sim.semdedup(
-        src, id_col=id_col, vec_col=vec_col,
-        threshold=cfg.get("threshold", 0.95), cluster=cluster,
-        nlist=cfg.get("nlist", 16), iters=cfg.get("iters", 2),
-        seed=cfg.get("seed", 0), centroids=cfg.get("centroids"),
-        max_cluster_size=cfg.get("max_cluster_size"),
-    )
-    return df.join(kept.select(id_col), id_col, "left_semi")
-
-
 def _stage_dsir_select(df, spark, sf_dir, cfg):
     """DSIR importance-resample ``k`` rows toward a target distribution
     (functions/weighting.py). Target = ``target_where`` filter over the
@@ -598,7 +556,6 @@ STAGE_REGISTRY = {
     "dedup_minhash": _stage_dedup_minhash,
     "span_dedup": _stage_span_dedup,
     "decontaminate": _stage_decontaminate,
-    "semdedup": _stage_semdedup,
     "dsir_select": _stage_dsir_select,
     "pii_scrub": _stage_pii_scrub,
     "sample": _stage_sample,

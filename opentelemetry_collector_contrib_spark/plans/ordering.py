@@ -134,8 +134,8 @@ def conv_text_digest_hier(
     parallel). The value differs from :func:`conv_text_digest` (it's a
     digest-of-digests) but carries the same invariant — any change to
     any turn's text or order changes it — while removing the hot-conv
-    bottleneck: BENCH/skew.py measures the flat digest spending ~10 s
-    single-task on a 3M-turn conversation because the final
+    bottleneck: BENCH/BASELINE.md §1b records the flat digest spending
+    ~10 s single-task on a 3M-turn conversation because the final
     sort+concat+md5 of one conversation is inherently one task (salting
     the collect phase doesn't help — the phase-2 merge re-sorts
     everything; measured 0.9x). Here phase 1 digests blocks across the
@@ -187,8 +187,8 @@ def salted_conv_text_digest(
     every turn.
 
     ``hot_keys``: salting every key makes the LONG TAIL pay a second
-    shuffle for nothing (measured 0.75x on a 50%-hot dataset —
-    BENCH/skew.py). Production shape: pass the known/detected heavy
+    shuffle for nothing (measured 0.75x on a 50%-hot dataset, recorded
+    in BENCH/BASELINE.md §1b). Production shape: pass the known/detected heavy
     hitters; only they take the two-phase path, the tail aggregates
     plain, results union. With ``hot_keys=None`` everything is salted
     (correct, rarely optimal)."""

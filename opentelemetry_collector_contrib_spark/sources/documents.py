@@ -1,9 +1,9 @@
-"""Document / embedding corpus sources (training-data pipeline inputs).
+"""Document corpus source (training-data pipeline inputs).
 
-Plain parquet loads of the driver-provided tables; at production scale
-these would be Iceberg table scans — the query code is identical either
+A plain parquet load of the driver-provided table; at production scale
+this would be an Iceberg table scan — the query code is identical either
 way (DataFrame in, DataFrame out), column pruning and predicate pushdown
-reach the scan in both cases.
+reach the scan either way.
 """
 
 from __future__ import annotations
@@ -13,7 +13,3 @@ from pyspark.sql import DataFrame, SparkSession
 
 def documents_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def embeddings_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")

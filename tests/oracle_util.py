@@ -11,7 +11,7 @@ import duckdb
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
+    "documents".split()
 )
 
 

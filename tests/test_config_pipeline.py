@@ -79,6 +79,23 @@ def test_unknown_stage_type_fails_at_build(spark, sf_dir):
         )
 
 
+def test_stage_registry_stage_types():
+    collector = {
+        "resource_detect", "logstransform", "regex_parser", "grok_parser",
+        "key_value_parser", "severity_parser", "time_parser", "csv_parser",
+        "json_parser", "uri_parser", "trace_parser", "syslog_parser",
+        "container_parser", "otlpjson", "recombine", "logdedup",
+        "attributes", "enrich", "groupbyattrs", "ottl", "filter", "redact",
+    }
+    training = {
+        "quality_gate", "lang_gate", "gopher_gates", "repetition_gates",
+        "checkpoint", "dedup_exact", "dedup_minhash", "span_dedup",
+        "decontaminate", "dsir_select", "pii_scrub", "sample",
+        "global_shuffle", "pack_sequences",
+    }
+    assert set(cfgp.STAGE_REGISTRY) == collector | training
+
+
 def test_recombine_options(spark, sf_dir):
     from opentelemetry_collector_contrib_spark.operators import transformers
     from opentelemetry_collector_contrib_spark.sources import transcripts as src

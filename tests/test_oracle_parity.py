@@ -24,12 +24,12 @@ def con(sf_dir):
     c.close()
 
 
+def test_every_query_has_an_oracle():
+    assert set(QUERIES) == set(ORACLES)
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir, con):
-    if name not in ORACLES:
-        df = QUERIES[name](spark, sf_dir)
-        assert df.count() >= 0  # rows-only check, like the driver
-        return
     ok, msg = compare(QUERIES[name](spark, sf_dir), con, ORACLES[name])
     assert ok, f"{name}: {msg}"
 

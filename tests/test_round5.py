@@ -1,7 +1,6 @@
 """Round-5 tests: the ADVICE defect fixes, the new Gopher gates, the
-uap-core bot/webview/TV UserAgent blocks, the posexplode IVF centroid
-update, the exact_sample materialize lifecycle, and the config-driven
-training-data DAG.
+uap-core bot/webview/TV UserAgent blocks, the exact_sample materialize
+lifecycle, and the config-driven training-data DAG.
 
 ADVICE defects pinned here:
   1. filter_drop(drop_ratio) hashed map-typed columns with xxhash64 →
@@ -21,7 +20,6 @@ from __future__ import annotations
 
 import datetime
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -34,7 +32,6 @@ from opentelemetry_collector_contrib_spark.operators.useragent import (
     user_agent_map,
 )
 from opentelemetry_collector_contrib_spark.functions import sampling as sp
-from opentelemetry_collector_contrib_spark.functions import similarity as sim
 from opentelemetry_collector_contrib_spark.functions import text as tx
 
 
@@ -350,57 +347,6 @@ def test_useragent_other_rate_on_realistic_mix(spark):
     assert rate <= 1 / len(UA_CASES) + 1e-9  # only the planted unknown
 
 
-# --- IVF centroid update (posexplode, dimension-as-data) -----------------
-
-
-def _emb_df(spark, n=120, dim=8, seed=1):
-    rng = np.random.default_rng(seed)
-    vecs = rng.normal(size=(n, dim)).astype(float)
-    return spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)],
-        ["vec_id", "embedding"],
-    ), vecs
-
-
-def test_ivf_centroid_update_matches_numpy(spark):
-    """One Lloyd round must equal the independent numpy computation:
-    seeds -> cosine assignment -> per-cell arithmetic mean."""
-    df, vecs = _emb_df(spark, n=120, dim=8)
-    nlist = 4
-    got = sim.train_ivf_centroids(df, nlist=nlist, iters=1, seed=0)
-
-    # replicate: same deterministic seed choice (xxhash64 order)
-    seed_rows = (
-        df.orderBy(F.xxhash64(F.col("vec_id"), F.lit(0)))
-        .limit(nlist)
-        .select("vec_id")
-        .collect()
-    )
-    seeds = np.array([vecs[r["vec_id"]] for r in seed_rows])
-    c = seeds / np.maximum(
-        np.linalg.norm(seeds, axis=1, keepdims=True), 1e-12
-    )
-    m = vecs / np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
-    assign = np.argsort(-(m @ c.T), axis=1, kind="stable")[:, 0]
-    want = np.array(seeds, dtype=float)
-    for cell in range(nlist):
-        members = vecs[assign == cell]
-        if len(members):
-            want[cell] = members.mean(axis=0)
-    assert np.allclose(np.array(got), want, rtol=1e-9, atol=1e-12)
-
-
-def test_ivf_centroids_dim512_smoke(spark):
-    """Dimension is data, not column count: the same plan handles
-    dim 512 (the old one-avg-per-dimension build would compile a
-    512-aggregate query per round)."""
-    df, _ = _emb_df(spark, n=60, dim=512, seed=2)
-    got = sim.train_ivf_centroids(df, nlist=4, iters=1, seed=0)
-    arr = np.array(got)
-    assert arr.shape == (4, 512)
-    assert np.isfinite(arr).all()
-
-
 # --- config-driven training-data DAG -------------------------------------
 
 
@@ -523,29 +469,6 @@ def test_config_pipeline_pii_scrub_masks(spark):
         assert token in text, text
     for leak in ("bob@", "10.1.2.3", "123-45-6789", "abcdefghij"):
         assert leak not in text, text
-
-
-def test_config_pipeline_semdedup_stage(spark):
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    v = [1.0, 0.0, 0.0, 0.0]
-    w = [0.0, 1.0, 0.0, 0.0]
-    df = spark.createDataFrame(
-        [(1, v, "a"), (2, v, "b"), (3, w, "c")],
-        ["doc_id", "embedding", "text"],
-    )
-    cfg = {"processors": [
-        {"type": "semdedup", "planes": 2, "threshold": 0.95},
-    ]}
-    out, _ = config_pipeline.build_from_config(spark, "", cfg, source=df)
-    assert sorted(r["doc_id"] for r in out.collect()) == [1, 3]
-    assert set(out.columns) == {"doc_id", "embedding", "text"}
-    with pytest.raises(ValueError, match="needs column"):
-        config_pipeline.build_from_config(
-            spark, "",
-            {"processors": [{"type": "semdedup"}]},
-            source=df.drop("embedding"),
-        )
 
 
 def test_config_pipeline_span_dedup_stage(spark):
@@ -700,38 +623,6 @@ def test_dedup_exact_stage_single_pass_no_self_join(spark):
     assert sorted(r["doc_id"] for r in out.collect()) == [1, 2]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan
-
-
-def test_scaling_summarize_headline_selection():
-    # pure-python headline rule from BENCH/scaling.py: best PHYSICAL
-    # round wins; if every round is super-linear the least-inflated
-    # round is reported RAW with headline_valid=false (regression: the
-    # old code emitted a clamped 1.0 attributed to a round it also
-    # listed as excluded)
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "scaling", os.path.join(os.path.dirname(__file__), "..", "BENCH", "scaling.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    def rnd(i, eff, speedup=None):
-        return {"round": i, "speedup": speedup or round(eff * 4, 3),
-                "scaling_efficiency": eff, "levels": {}}
-
-    # mixed: the best physical round wins, super-linear ones excluded
-    s = mod.summarize([rnd(0, 0.974), rnd(1, 0.188), rnd(2, 1.005)])
-    assert s["best_round"] == 0 and s["scaling_efficiency"] == 0.974
-    assert s["headline_valid"] is True
-    assert s["superlinear_rounds_excluded"] == [2]
-
-    # all super-linear: least-inflated, raw, flagged invalid
-    s = mod.summarize([rnd(0, 1.31), rnd(1, 1.02), rnd(2, 1.2)])
-    assert s["best_round"] == 1 and s["scaling_efficiency"] == 1.02
-    assert s["headline_valid"] is False
-    assert s["superlinear_rounds_excluded"] == [0, 1, 2]
 
 
 def test_pii_scrub_paren_area_code_and_intl_prefix(spark):

@@ -6,27 +6,14 @@ from __future__ import annotations
 import sys
 
 import pytest
-from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
 from opentelemetry_collector_contrib_spark.functions import (  # noqa: E402
     dedup as dd,
-    multimodal as mm,
-    similarity as sim,
     text as tx,
 )
 from opentelemetry_collector_contrib_spark.sources import documents as docsrc  # noqa: E402
-
-
-@pytest.fixture(scope="module")
-def docs(spark, sf_dir):
-    df = docsrc.documents_df(spark, sf_dir).cache()
-    yield df
-    # unpersist at module teardown: a lingering cache makes any LATER
-    # test that builds the same documents plan hit the InMemoryRelation
-    # (e.g. the scan-pruning plan assertions stop seeing PushedFilters)
-    df.unpersist()
 
 
 def test_exact_dedup_finds_planted_duplicates(spark):
@@ -64,31 +51,6 @@ def test_simhash_identical_docs_collide(spark):
     assert len(fp[1]) == 16 and set(fp[1]) <= {"0", "1"}
 
 
-def test_ann_bruteforce_self_similarity_and_rank(spark, sf_dir):
-    emb = docsrc.embeddings_df(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") == 0)
-    out = sim.ann_bruteforce_topk(emb, q, k=3).collect()
-    assert len(out) == 3
-    assert [r["rank"] for r in out] == [1, 2, 3]
-    sims = [r["sim"] for r in out]
-    assert sims == sorted(sims, reverse=True)
-    assert all(r["vec_id"] != 0 for r in out)  # self excluded
-    assert all(-1.0 <= s <= 1.0 for s in sims)
-
-
-def test_ann_lsh_is_subset_of_bruteforce_candidates(spark, sf_dir):
-    emb = docsrc.embeddings_df(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 4)
-    lsh = sim.ann_lsh_topk(emb, q, k=5).collect()
-    # every LSH neighbor shares the query's bucket by construction
-    buckets = {
-        r["vec_id"]: r["b"]
-        for r in emb.select("vec_id", sim.lsh_bucket().alias("b")).collect()
-    }
-    for r in lsh:
-        assert buckets[r["vec_id"]] == buckets[r["q_id"]]
-
-
 def test_lang_id_on_known_sentences(spark):
     df = spark.createDataFrame(
         [
@@ -123,37 +85,6 @@ def test_fingerprint_stable_under_local_edit(spark):
     # single localized edit (here: min over 46 shingles, 5 affected)
     assert rows[1]["exact_hash"] != rows[2]["exact_hash"]
     assert rows[1]["fingerprint"] == rows[2]["fingerprint"]
-
-
-def test_multimodal_real_impl_raises(spark, docs):
-    payloads = mm.attach_fake_payload(docs.limit(5))
-    feats = mm.decode_features(payloads, impl="real")
-    with pytest.raises(Exception) as exc:
-        feats.collect()
-    assert "NotImplementedError" in str(exc.value) or "media decode" in str(exc.value)
-
-
-def test_multimodal_fake_features_shape(spark, docs):
-    payloads = mm.attach_fake_payload(docs.limit(10))
-    feats = mm.decode_features(payloads, impl="fake")
-    rows = feats.collect()
-    assert len(rows) == 10
-    for r in rows:
-        assert r["kind"] in ("image", "audio", "video")
-        assert r["n_bytes"] > 4
-        assert 0.0 <= r["byte_entropy_proxy"] <= 1.0
-        assert r["frame_count"] >= 1
-        if r["kind"] == "image":
-            assert r["frame_count"] == 1
-
-
-def test_multimodal_rebalance_partition_count(spark, docs):
-    payloads = mm.attach_fake_payload(docs.limit(100))
-    out = mm.rebalance_for_payloads(
-        payloads, approx_row_bytes=1 << 20, target_partition_bytes=16 << 20
-    )
-    # 100 rows * 1MiB / 16MiB => ~6 partitions
-    assert 1 <= out.rdd.getNumPartitions() <= 16
 
 
 def test_unicode_text_survives_parse_and_dedup(spark):
@@ -241,53 +172,6 @@ def test_repetition_signals_on_documents(spark, sf_dir):
             assert 0.0 <= r[c] <= 1.0, (r["doc_id"], c, r[c])
 
 
-def test_ann_ivf_full_probe_equals_bruteforce(spark, sf_dir):
-    """nprobe == nlist probes every cell, so IVF must reproduce the
-    exact brute-force top-k (same candidate set, same scoring)."""
-    from opentelemetry_collector_contrib_spark.functions import similarity as sim
-    from opentelemetry_collector_contrib_spark.sources import documents as docsrc
-
-    emb = docsrc.embeddings_df(spark, sf_dir)
-    q = emb.limit(4)
-    bf = {
-        (r["q_id"], r["rank"]): r["vec_id"]
-        for r in sim.ann_bruteforce_topk(emb, q, k=3).collect()
-    }
-    ivf = {
-        (r["q_id"], r["rank"]): r["vec_id"]
-        for r in sim.ann_ivf_topk(
-            emb, q, k=3, nlist=8, nprobe=8, iters=1
-        ).collect()
-    }
-    assert ivf == bf
-
-
-def test_ann_ivf_partial_probe_recall_and_determinism(spark, sf_dir):
-    """nprobe < nlist: results are a subset of each query's probed
-    cells with useful recall vs brute force, and two runs agree."""
-    from opentelemetry_collector_contrib_spark.functions import similarity as sim
-    from opentelemetry_collector_contrib_spark.sources import documents as docsrc
-
-    emb = docsrc.embeddings_df(spark, sf_dir)
-    q = emb.limit(5)
-    cents = sim.train_ivf_centroids(emb, nlist=8, iters=2)
-    a = sim.ann_ivf_topk(emb, q, k=5, nprobe=3, centroids=cents).collect()
-    b = sim.ann_ivf_topk(emb, q, k=5, nprobe=3, centroids=cents).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    bf = sim.ann_bruteforce_topk(emb, q, k=5).collect()
-    bf_set = {(r["q_id"], r["vec_id"]) for r in bf}
-    ivf_set = {(r["q_id"], r["vec_id"]) for r in a}
-    recall = len(ivf_set & bf_set) / len(bf_set)
-    assert recall >= 0.4, recall  # partial probe keeps useful recall
-    # every IVF hit is a genuine corpus neighbor scored exactly: its
-    # sim must match the brute-force sim when both found the pair
-    bf_sim = {(r["q_id"], r["vec_id"]): r["sim"] for r in bf}
-    for r in a:
-        key = (r["q_id"], r["vec_id"])
-        if key in bf_sim:
-            assert abs(r["sim"] - bf_sim[key]) < 1e-9
-
-
 def test_clean_corpus_repetition_gates(spark, sf_dir):
     """Optional Gopher gates drop repetitive docs; default-off keeps
     the original pipeline output unchanged."""
@@ -302,22 +186,8 @@ def test_clean_corpus_repetition_gates(spark, sf_dir):
     assert len(gated_ids) < len(base_ids)
 
 
-def test_ann_ivf_plan_shape(spark, sf_dir):
-    """Candidate discovery must be a broadcast equi-join on the int
-    cell id — never a cartesian product."""
-    from opentelemetry_collector_contrib_spark.functions import similarity as sim
-    from opentelemetry_collector_contrib_spark.sources import documents as docsrc
-
-    emb = docsrc.embeddings_df(spark, sf_dir)
-    cents = sim.train_ivf_centroids(emb, nlist=4, iters=0)
-    out = sim.ann_ivf_topk(emb, emb.limit(2), k=3, nprobe=2, centroids=cents)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Cartesian" not in plan and "NestedLoop" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 # ---------------------------------------------------------------------------
-# round 5: benchmark decontamination + SemDeDup
+# round 5: benchmark decontamination
 # ---------------------------------------------------------------------------
 
 from opentelemetry_collector_contrib_spark.functions import decontam as dc  # noqa: E402
@@ -382,77 +252,6 @@ def test_contamination_eval_side_broadcast(spark):
     eval_docs = spark.createDataFrame([(9, "a b c")], ["doc_id", "text"])
     plan = dc.contamination_report(corpus, eval_docs)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-
-
-def _emb(spark, rows):
-    return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-
-def test_semdedup_explicit_cluster_dominance_rule(spark):
-    """Same-cluster near-dups: every id dominated by a smaller similar id
-    drops; the minimum id of each group survives; cross-cluster
-    duplicates both survive (blocking is intentional, SemDeDup §3)."""
-    v = [1.0, 0.0, 0.0, 0.0]
-    w = [0.0, 1.0, 0.0, 0.0]
-    rows = [
-        (1, v), (2, v), (5, v),       # cluster c1 triple dup -> keep 1
-        (3, w),                        # c1, orthogonal -> kept
-        (4, v),                        # cluster c2 dup of 1, other block -> kept
-    ]
-    emb = _emb(spark, rows).withColumn(
-        "cl", F.when(F.col("vec_id") == 4, "c2").otherwise("c1")
-    )
-    kept = sim.semdedup(emb, cluster=F.col("cl"), threshold=0.95)
-    assert {r["vec_id"] for r in kept.collect()} == {1, 3, 4}
-
-
-def test_semdedup_max_cluster_size_cap(spark):
-    """Clusters above the cap are excluded from the pair join: all their
-    members are kept (the LSH family's hot-band escape hatch)."""
-    v = [1.0, 0.0]
-    rows = [(i, v) for i in range(1, 5)]          # one cluster of 4 dups
-    emb = _emb(spark, rows).withColumn("cl", F.lit("hot"))
-    kept = sim.semdedup(emb, cluster=F.col("cl"), threshold=0.9,
-                        max_cluster_size=3)
-    assert {r["vec_id"] for r in kept.collect()} == {1, 2, 3, 4}
-    kept2 = sim.semdedup(emb, cluster=F.col("cl"), threshold=0.9,
-                         max_cluster_size=10)
-    assert {r["vec_id"] for r in kept2.collect()} == {1}
-
-
-def test_semdedup_ivf_cluster_path(spark):
-    """cluster=None trains the IVF spherical k-means quantizer; exact
-    duplicates land in the same cell and dedup to the min id."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    a = rng.normal(size=8); a /= np.linalg.norm(a)
-    b = rng.normal(size=8); b /= np.linalg.norm(b)
-    rows = [(1, a.tolist()), (2, a.tolist()), (3, b.tolist()), (4, b.tolist())]
-    kept = sim.semdedup(_emb(spark, rows), threshold=0.99, nlist=2, seed=3)
-    assert {r["vec_id"] for r in kept.collect()} == {1, 3}
-
-
-def test_semdedup_no_cartesian_product(spark):
-    """The within-cluster pair probe must be an equi-join on the cluster
-    key, never a cartesian/nested-loop product."""
-    v = [1.0, 0.0]
-    emb = _emb(spark, [(i, v) for i in range(1, 4)]).withColumn(
-        "cl", F.when(F.col("vec_id") < 100, "c").otherwise("d")
-    )
-    kept = sim.semdedup(emb, cluster=F.col("cl"), threshold=0.9)
-    plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_semdedup_deterministic(spark):
-    emb = docsrc.embeddings_df(spark, "/root/testdata/sf0.001")
-    k1 = sorted(r["vec_id"] for r in sim.semdedup(
-        emb, cluster=sim.lsh_bucket("embedding"), threshold=0.28).collect())
-    k2 = sorted(r["vec_id"] for r in sim.semdedup(
-        emb, cluster=sim.lsh_bucket("embedding"), threshold=0.28).collect())
-    assert k1 == k2 and len(k1) > 0
 
 
 # --- C4 three-sentence-span dedup (Raffel et al. 2020 §2.2) ---
