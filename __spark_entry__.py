@@ -612,10 +612,8 @@ def q_ottl_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from opentelemetry_collector_contrib_spark.functions import (  # noqa: E402
-    decontam as dc,
     dedup as dd,
     text as tx,
-    weighting as wt,
 )
 from opentelemetry_collector_contrib_spark.sources import documents as docsrc  # noqa: E402
 
@@ -642,44 +640,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = dd.shingles(docsrc.documents_df(spark, sf_dir), w=SHINGLE_W)
     return dd.jaccard_topk_pairs(sh, topk=20)
-
-
-def q_corpus_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Not a driver row: the FULL declarative training-data recipe as
-    one config-compiled job — PII scrub -> Gopher gates -> exact dedup ->
-    minhash near-dup with connected-components survivors ->
-    benchmark decontamination -> DSIR target selection -> deterministic
-    global shuffle -> sequence packing. Every stage is individually
-    oracle- or pytest-checked; this entry composes them
-    (tests/test_round5.py::test_corpus_dag_end_to_end)."""
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    docs = docsrc.documents_df(spark, sf_dir)
-    cfg = {
-        "processors": [
-            {"type": "pii_scrub"},
-            {"type": "gopher_gates", "min_words": 5, "max_symbol_word_ratio": 0.3},
-            {"type": "dedup_exact"},
-            # boundary: everything downstream is multi-pass (components
-            # iteration, decontamination probe, DSIR's two scans) — cut
-            # the lineage once so passes re-read a materialized frame
-            {"type": "checkpoint"},
-            {"type": "dedup_minhash", "components": True},
-            {"type": "checkpoint"},
-            {"type": "decontaminate", "eval_where": "doc_id % 17 = 0", "n": 3},
-            # dsir_select re-reads its input 3+ times (corpus count,
-            # target count, weight join + semi-join back) — cut the
-            # lineage after the decontamination probe or each pass
-            # re-runs the shingle explode + broadcast join
-            {"type": "checkpoint"},
-            {"type": "dsir_select", "target_where": "doc_id % 13 = 0",
-             "k": 200, "seed": 5},
-            {"type": "global_shuffle", "key": "doc_id", "seed": 5},
-            {"type": "pack_sequences", "budget": 2048},
-        ]
-    }
-    out, _sinks = config_pipeline.build_from_config(spark, sf_dir, cfg, source=docs)
-    return out
 
 
 CORPUS_MIN_QUALITY = 0.5
@@ -855,41 +815,7 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.repetition_signals(docsrc.documents_df(spark, sf_dir))
 
 
-#: every 17th document plays the held-out benchmark set for the
-#: decontamination driver row (30/500 docs at sf0.01 — deterministic,
-#: no external data per the brief)
-DECON_EVAL_MOD = 17
-
-def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (GPT-3 appendix C recipe) — per-doc
-    n-gram collision counts against a broadcast eval set
-    (functions/decontam.py). Eval side = every 17th document; n =
-    SHINGLE_W so the oracle reuses the shared shingle CTE and the whole
-    dedup family agrees on one n-gram definition."""
-    docs = docsrc.documents_df(spark, sf_dir)
-    eval_docs = docs.filter(F.col("doc_id") % DECON_EVAL_MOD == 0)
-    return dc.contamination_report(docs, eval_docs, n=SHINGLE_W)
-
-
-#: every 13th document plays the high-quality target distribution for
-#: the DSIR driver row (deterministic slice, disjoint modulus from the
-#: decontamination eval slice so the two rows stress different subsets)
-DSIR_TARGET_MOD = 13
-
-
-def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023) of the documents
-    corpus against a deterministic target slice
-    (functions/weighting.py). The md5-prefix bucketing makes the whole
-    hashed-n-gram likelihood-ratio model SQL-replayable; the Gumbel
-    resampling step is seeded-hash deterministic and covered by
-    pytest (not SQL-expressible, same split as sample_invariants)."""
-    docs = docsrc.documents_df(spark, sf_dir)
-    target = docs.filter(F.col("doc_id") % DSIR_TARGET_MOD == 0)
-    return wt.dsir_logweights(docs, target)
-
-
-SAMPLE_K, SAMPLE_FRAC, PACK_BUDGET, PACK_SHARDS = 30, 0.2, 64, 8
+SAMPLE_K, SAMPLE_FRAC = 30, 0.2
 
 
 def q_sample_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -975,58 +901,6 @@ def q_sample_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_g_stable") == F.col("n_g")).alias("gexact_stable"),
         (F.col("n_g_large") == F.col("n_g")).alias("glarge_eq"),
         (F.col("_shuffle_min") == 1).alias("shuffle_ordered"),
-    )
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing (functions/packing.py): greedy next-fit binning
-    into token budgets — the corpus→training-shards step. Oracle checks
-    the packing invariants that hold for ANY shard hash: every doc lands
-    in exactly one bin, token mass is conserved, no multi-doc bin
-    exceeds the budget, every over-budget doc sits alone in its own bin
-    (never dropped), and bin count ≥ the ceil(total/budget) lower
-    bound."""
-    from opentelemetry_collector_contrib_spark.functions.packing import (
-        pack_sequences,
-    )
-
-    docs = docsrc.documents_df(spark, sf_dir).select(
-        "doc_id", F.size(F.split("text", " ")).alias("n_tokens")
-    )
-    bins = pack_sequences(
-        docs, budget=PACK_BUDGET, num_shards=PACK_SHARDS, id_col="doc_id"
-    )
-    n_over_docs = docs.filter(F.col("n_tokens") > PACK_BUDGET).count()
-    agg = bins.agg(
-        F.sum("n_docs").alias("n_docs_packed"),
-        F.sum(F.size(F.array_distinct("doc_ids"))).alias("n_docs_distinct"),
-        F.sum("total_tokens").alias("total_tokens"),
-        F.count(
-            F.when(
-                (F.col("n_docs") > 1) & (F.col("total_tokens") > PACK_BUDGET),
-                True,
-            )
-        ).alias("multi_over_budget"),
-        F.count(
-            F.when(
-                (F.col("n_docs") == 1) & (F.col("total_tokens") > PACK_BUDGET),
-                True,
-            )
-        ).alias("_single_over"),
-        F.count("*").alias("_n_bins"),
-    )
-    return agg.select(
-        "n_docs_packed",
-        "n_docs_distinct",
-        "total_tokens",
-        "multi_over_budget",
-        (F.col("_single_over") == F.lit(n_over_docs)).alias(
-            "oversized_alone_ok"
-        ),
-        (
-            F.col("_n_bins")
-            >= F.ceil(F.col("total_tokens") / F.lit(PACK_BUDGET))
-        ).alias("bins_lb_ok"),
     )
 
 
@@ -1296,7 +1170,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # 49 entries (the driver checks at most 50), one per operator.
+    # 46 entries (the driver contract allows at most 50), one per operator.
     # Each has an oracle_sql() row of the same name.
     return {
         "parse_regex": q_parse_regex,
@@ -1324,7 +1198,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "jsonarray_parse": q_jsonarray_parse,
         "flatten_retain": q_flatten_retain,
         "resource_detection": q_resource_detection,
-        "pack_sequences": q_pack_sequences,
         "syslog_rfc5424": q_syslog_rfc5424,
         "container_parse": q_container_parse,
         "container_recombine": q_container_recombine,
@@ -1346,8 +1219,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_clean": q_corpus_clean,
         "text_stats": q_text_stats,
         "repetition_signals": q_repetition_signals,
-        "decontamination": q_decontamination,
-        "dsir_weights": q_dsir_weights,
     }
 
 
@@ -1615,15 +1486,6 @@ def oracle_sql() -> dict[str, str]:
         "CASE WHEN role = 'system' THEN 'pinned-host' ELSE "
         f"'{_DET['host.name']}' END AS host_name, "
         f"'{_DET['host.arch']}' AS host_arch FROM transcripts",
-        "pack_sequences": (
-            "SELECT cast(count(*) AS bigint) AS n_docs_packed, "
-            "cast(count(DISTINCT doc_id) AS bigint) AS n_docs_distinct, "
-            "cast(sum(len(string_split(text, ' '))) AS bigint) "
-            "AS total_tokens, "
-            "cast(0 AS bigint) AS multi_over_budget, "
-            "TRUE AS oversized_alone_ok, TRUE AS bins_lb_ok "
-            "FROM documents"
-        ),
         "syslog_rfc5424": f"{_T}, "
         f"lines AS (SELECT conv_id, turn_idx, {_SYSLOG_LINE} AS text FROM transcripts) "
         f"SELECT conv_id, turn_idx, regexp_matches(text, '{_RFC5424_SQL}') AS parse_ok, "
@@ -1710,9 +1572,9 @@ def oracle_sql() -> dict[str, str]:
         "otlpjson_connector": f"{_T} "
         "SELECT conv_id, turn_idx, role AS body, 'INFO' AS severityText, "
         "tool AS attr_tool FROM transcripts",
-        # envelope round-trip: packing + parsing must be lossless, so the
+        # envelope round-trip: encoding + parsing must be lossless, so the
         # expected rows are simply the flat origin plus the constant
-        # resource/scope metadata the packer stamps
+        # resource/scope metadata the encoder stamps
         "otlpjson_envelope": f"{_T} "
         "SELECT conv_id, turn_idx, role, "
         "CASE WHEN turn_idx % 5 = 0 "
@@ -1781,23 +1643,6 @@ def oracle_sql() -> dict[str, str]:
             f"b AS (SELECT doc_id, {_SIMHASH_SUMS} FROM tok GROUP BY doc_id) "
             f"SELECT doc_id, {_SIMHASH_FP} AS simhash FROM b"
         ),
-        "decontamination": (
-            f"WITH {_TOKS_CTE}, {_SHINGLE_CTE}, "
-            f"ev AS (SELECT DISTINCT shingle FROM sh "
-            f"WHERE doc_id % {DECON_EVAL_MOD} = 0), "
-            "rep AS (SELECT s.doc_id, count(*) AS n_ngrams, "
-            "count(ev.shingle) AS n_contaminated "
-            "FROM sh s LEFT JOIN ev ON s.shingle = ev.shingle "
-            "GROUP BY s.doc_id) "
-            # zero-shingle docs keep a row (n_ngrams=0, clean) — the
-            # Spark side joins the id spine back for the same reason
-            "SELECT d.doc_id, coalesce(r.n_ngrams, 0) AS n_ngrams, "
-            "coalesce(r.n_contaminated, 0) AS n_contaminated, "
-            "coalesce(cast(r.n_contaminated AS double) / r.n_ngrams, 0.0) "
-            "AS contamination, "
-            "coalesce(r.n_contaminated, 0) >= 1 AS contaminated "
-            "FROM documents d LEFT JOIN rep r ON d.doc_id = r.doc_id"
-        ),
         "dedup_ngram_jaccard": (
             f"WITH {_TOKS_CTE}, {_SHINGLE_CTE}, "
             "sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id), "
@@ -1811,25 +1656,6 @@ def oracle_sql() -> dict[str, str]:
             "ORDER BY jaccard DESC, doc_a, doc_b LIMIT 20"
         ),
         "corpus_clean": _corpus_oracle_sql(),
-        "dsir_weights": (
-            f"WITH {_TOKS_CTE}, "
-            "terms AS (SELECT doc_id, unnest(list_concat(t, "
-            "list_transform(generate_series(1, greatest(len(t) - 1, 1)), "
-            "i -> array_to_string(t[i:i+1], ' ')))) AS term FROM toks), "
-            "tf AS (SELECT doc_id, left(md5(term), 2) AS bucket "
-            "FROM terms WHERE term <> ''), "
-            "cr AS (SELECT bucket, count(*) AS c_raw FROM tf GROUP BY bucket), "
-            "ct AS (SELECT bucket, count(*) AS c_tgt FROM tf "
-            f"WHERE doc_id % {DSIR_TARGET_MOD} = 0 GROUP BY bucket), "
-            "lam AS (SELECT cr.bucket, "
-            "ln((coalesce(ct.c_tgt, 0) + 1.0) / "
-            "((SELECT coalesce(sum(c_tgt), 0) FROM ct) + 256.0)) - "
-            "ln((cr.c_raw + 1.0) / ((SELECT sum(c_raw) FROM cr) + 256.0)) "
-            "AS lam FROM cr LEFT JOIN ct ON cr.bucket = ct.bucket) "
-            "SELECT tf.doc_id, count(*) AS n_terms, sum(lam.lam) AS logw, "
-            "sum(lam.lam) / count(*) AS avg_logw "
-            "FROM tf JOIN lam ON tf.bucket = lam.bucket GROUP BY tf.doc_id"
-        ),
         "text_stats": (
             f"WITH {_TOKS_CTE}, "
             + _QUALITY_EXPRS.format(h_en=_HITS["en"].replace("(t,", "(tk.t,"))

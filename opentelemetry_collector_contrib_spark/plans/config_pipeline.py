@@ -230,8 +230,8 @@ def _stage_resource_detect(df, spark, sf_dir, cfg):
 
 # --- training-data stages (functions/) — the corpus-prep ops exposed
 # with the same declarative shape as the collector operators, so one
-# config can express "clean → dedup → sample → shuffle → pack" as a
-# stage list (the reference's operator-DAG idiom applied to the
+# config can express "clean → dedup → sample → shuffle" as a stage
+# list (the reference's operator-DAG idiom applied to the
 # data-pipeline tier). All thresholds/keys come from the stage dict.
 
 
@@ -376,47 +376,6 @@ def _stage_global_shuffle(df, spark, sf_dir, cfg):
     )
 
 
-def _stage_decontaminate(df, spark, sf_dir, cfg):
-    """Remove documents colliding with an eval set on long word
-    n-grams (functions/decontam.py). The eval side is either a filter
-    over the flowing frame (``eval_where`` SQL string) or an external
-    parquet of (id, text) (``eval_path``)."""
-    from ..functions import decontam as dc
-
-    if "eval_path" in cfg:
-        eval_docs = spark.read.parquet(cfg["eval_path"])
-    else:
-        eval_docs = df.filter(F.expr(cfg["eval_where"]))
-    return dc.decontaminate(
-        df, eval_docs, col=cfg.get("col", "text"),
-        id_col=cfg.get("id_col", "doc_id"), n=cfg.get("n", 8),
-        min_hits=cfg.get("min_hits", 1),
-    )
-
-
-def _stage_dsir_select(df, spark, sf_dir, cfg):
-    """DSIR importance-resample ``k`` rows toward a target distribution
-    (functions/weighting.py). Target = ``target_where`` filter over the
-    frame or an external ``target_path`` parquet of (id, text)."""
-    from ..functions import weighting as wt
-
-    id_col = cfg.get("id_col", "doc_id")
-    if "target_path" in cfg:
-        target = spark.read.parquet(cfg["target_path"])
-    else:
-        target = df.filter(F.expr(cfg["target_where"]))
-    weights = wt.dsir_logweights(
-        df, target, col=cfg.get("col", "text"), id_col=id_col,
-        bucket_prefix=cfg.get("bucket_prefix", 2),
-        alpha=cfg.get("alpha", 1.0),
-    )
-    picked = wt.importance_resample(
-        weights, cfg["k"], id_col=id_col, seed=cfg.get("seed", 0),
-        temperature=cfg.get("temperature", 1.0),
-    )
-    return df.join(picked.select(id_col), id_col, "left_semi")
-
-
 #: published-recipe PII patterns (the C4/RefinedWeb-style scrub):
 #: order matters — the more-specific dotted/dashed numeric shapes (IPv4,
 #: SSN) run BEFORE the phone rule, or "255.255.255.255" reads as a phone
@@ -459,15 +418,15 @@ def _stage_pii_scrub(df, spark, sf_dir, cfg):
 
 
 def _stage_checkpoint(df, spark, sf_dir, cfg):
-    """Materialization boundary. Several training-data stages are
-    multi-pass over their input (DSIR's count+weight scans, the
-    decontamination probe, components iteration, any stage pair that
-    both scan the frame): without a boundary each pass re-executes the
-    entire upstream DAG, turning a linear pipeline into a quadratic
-    one. A real deployment writes intermediate tables between phases —
-    this stage is that, declaratively. ``mode: parquet`` (+ ``path``)
-    is the durable cluster form; the default ``localCheckpoint`` keeps
-    the boundary in executor storage (fast, non-durable)."""
+    """Materialization boundary. Some training-data stages are
+    multi-pass over their input (minhash components iteration, any
+    stage pair that both scan the frame): without a boundary each pass
+    re-executes the entire upstream DAG, turning a linear pipeline into
+    a quadratic one. A real deployment writes intermediate tables
+    between phases — this stage is that, declaratively. ``mode:
+    parquet`` (+ ``path``) is the durable cluster form; the default
+    ``localCheckpoint`` keeps the boundary in executor storage (fast,
+    non-durable)."""
     if cfg.get("mode") == "parquet":
         df.write.mode("overwrite").parquet(cfg["path"])
         return spark.read.parquet(cfg["path"])
@@ -489,20 +448,6 @@ def _stage_span_dedup(df, spark, sf_dir, cfg):
     )
     return df.drop(col).join(
         rewritten.select(id_col, F.col("clean_text").alias(col)), id_col
-    )
-
-
-def _stage_pack(df, spark, sf_dir, cfg):
-    from ..functions import packing as pk
-    from ..functions import text as tx
-
-    tokens_col = cfg.get("tokens_col", "n_tokens")
-    if tokens_col not in df.columns:
-        df = tx.token_count(df, col=cfg.get("col", "text"), out=tokens_col)
-    return pk.pack_sequences(
-        df, budget=cfg["budget"], tokens_col=tokens_col,
-        id_col=cfg.get("id_col", "doc_id"),
-        num_shards=cfg.get("num_shards", 64), seed=cfg.get("seed", 0),
     )
 
 
@@ -555,13 +500,35 @@ STAGE_REGISTRY = {
     "dedup_exact": _stage_dedup_exact,
     "dedup_minhash": _stage_dedup_minhash,
     "span_dedup": _stage_span_dedup,
-    "decontaminate": _stage_decontaminate,
-    "dsir_select": _stage_dsir_select,
     "pii_scrub": _stage_pii_scrub,
     "sample": _stage_sample,
     "global_shuffle": _stage_global_shuffle,
-    "pack_sequences": _stage_pack,
 }
+
+#: config keys a stage reads without a default, checked before any stage
+#: runs; ``sample`` and ``checkpoint`` need a key only in one mode (see
+#: _required_keys)
+_REQUIRED_KEYS = {
+    "regex_parser": ("pattern", "groups"),
+    "grok_parser": ("pattern",),
+    "csv_parser": ("header",),
+    "json_parser": ("schema",),
+    "logdedup": ("key_cols",),
+    "attributes": ("actions",),
+    "enrich": ("dim", "on"),
+    "groupbyattrs": ("keys",),
+    "ottl": ("statements",),
+    "filter": ("drop_where",),
+    "resource_detect": ("detectors",),
+}
+
+
+def _required_keys(stage: dict) -> tuple[str, ...]:
+    if stage["type"] == "sample" and "strata_col" not in stage:
+        return ("k",)
+    if stage["type"] == "checkpoint" and stage.get("mode") == "parquet":
+        return ("path",)
+    return _REQUIRED_KEYS.get(stage["type"], ())
 
 
 def load_config(path: str) -> dict:
@@ -595,13 +562,18 @@ def build_from_config(
     ``request["k"] == "v"`` string, resolved per run on the driver)."""
     lin = lineage or Lineage()
     # validate the WHOLE config before any stage runs — including
-    # operators nested inside logstransform — so a typo'd type can
-    # never fail mid-job after upstream side-effecting stages (eager
-    # checkpoint writes) already executed
+    # operators nested inside logstransform — so a typo'd type or a
+    # missing required key can never fail mid-job after upstream
+    # side-effecting stages (eager checkpoint writes) already executed
     def _check(entries, what):
         for p in entries:
             if p["type"] not in STAGE_REGISTRY:
                 raise ValueError(f"unknown {what} type {p['type']!r}")
+            for key in _required_keys(p):
+                if key not in p:
+                    raise ValueError(
+                        f"{what} {p['type']!r} is missing required key {key!r}"
+                    )
             if p["type"] == "logstransform":
                 _check(p.get("operators", []), "logstransform operator")
             elif "operators" in p:

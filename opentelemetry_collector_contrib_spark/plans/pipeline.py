@@ -11,7 +11,7 @@ does (SURVEY.md north rule):
     -> routing connector (first-match-wins tag; resource-context route)
     -> per-sink exporters + count/sum connectors
 
-Scale design (local[32] here, 1000 executors in spirit):
+Scale design (the same plan on local[N] or a cluster):
   * The fact table is never shuffled before routing: parse/enrich/tag are
     all narrow (dims broadcast).  `.explain` shows one WholeStageCodegen
     span from scan to tag when using the native parse path.
@@ -42,14 +42,33 @@ class PipelineResult:
     lineage: Lineage
 
 
-DEFAULT_ROUTES = [
-    # 1) row-level: ERROR/FATAL turns -> errors + audit (route duplication)
-    dict(name="errors", context="log", sinks=["errors", "audit"]),
-    # 2) resource-level: any FATAL in the conversation -> whole conv to incident
-    dict(name="incident", context="resource", sinks=["incident"]),
-    # 3) row-level: risky tool usage
-    dict(name="risky_tools", context="log", sinks=["risky_tools"]),
-]
+def default_routes() -> list[connectors.Route]:
+    """The flagship routing table, in match order (first match wins).
+    Batch uses all of it; streaming takes the ``context == "log"``
+    subset. A function, not a constant: ``F.col`` needs a live session."""
+    return [
+        # row-level: ERROR/FATAL turns -> errors + audit (route duplication)
+        connectors.Route(
+            condition=F.col("level").isin("ERROR", "FATAL"),
+            sinks=["errors", "audit"],
+            context="log",
+            name="errors",
+        ),
+        # resource-level: any FATAL in the conversation -> whole conv to incident
+        connectors.Route(
+            condition=F.col("level") == "FATAL",
+            sinks=["incident"],
+            context="resource",
+            name="incident",
+        ),
+        # row-level: risky tool usage
+        connectors.Route(
+            condition=(F.col("tool") != "") & (F.col("risk_tier") == "high"),
+            sinks=["risky_tools"],
+            context="log",
+            name="risky_tools",
+        ),
+    ]
 
 
 def build(
@@ -85,28 +104,8 @@ def build(
     enriched = lin.observe(enriched, "enrich")
 
     # ---- route stage (routing connector) ----
-    routes = [
-        connectors.Route(
-            condition=F.col("level").isin("ERROR", "FATAL"),
-            sinks=["errors", "audit"],
-            context="log",
-            name="errors",
-        ),
-        connectors.Route(
-            condition=F.col("level") == "FATAL",
-            sinks=["incident"],
-            context="resource",
-            name="incident",
-        ),
-        connectors.Route(
-            condition=(F.col("tool") != "") & (F.col("risk_tier") == "high"),
-            sinks=["risky_tools"],
-            context="log",
-            name="risky_tools",
-        ),
-    ]
     tagged, sink_map = connectors.route_logs(
-        enriched, routes, default_sinks=["catchall"]
+        enriched, default_routes(), default_sinks=["catchall"]
     )
     tagged = lin.observe(tagged, "route")
 

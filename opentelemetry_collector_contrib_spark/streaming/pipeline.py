@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import connectors, parsers, processors
+from ..plans.pipeline import default_routes
 from ..schema import PARSE_PATTERN, PARSE_GROUPS, TRANSCRIPT_SCHEMA
 from ..sources import transcripts as src
 
@@ -56,28 +57,16 @@ def build_stream(
 ) -> tuple[DataFrame, dict[str, list[str]]]:
     """Same logical stages as plans.pipeline.build, on a streaming DF.
 
-    Routing table = the log-context subset of DEFAULT_ROUTES (resource
-    context needs a conversation-wide window -> batch only)."""
+    Routing table = the log-context subset of
+    plans.pipeline.default_routes() (resource context needs a
+    conversation-wide window -> batch only)."""
     parsed = parsers.regex_parse(stream, PARSE_PATTERN, PARSE_GROUPS)
     parsed = parsers.severity_parse(parsed, parse_from="level")
     enriched = processors.enrich_lookup(
         parsed, src.conv_dim_df(spark, sf_dir), on="conv_id"
     )
     enriched = processors.enrich_lookup(enriched, src.tool_dim_df(spark), on="tool")
-    routes = [
-        connectors.Route(
-            condition=F.col("level").isin("ERROR", "FATAL"),
-            sinks=["errors", "audit"],
-            context="log",
-            name="errors",
-        ),
-        connectors.Route(
-            condition=(F.col("tool") != "") & (F.col("risk_tier") == "high"),
-            sinks=["risky_tools"],
-            context="log",
-            name="risky_tools",
-        ),
-    ]
+    routes = [r for r in default_routes() if r.context == "log"]
     return connectors.route_logs(enriched, routes, default_sinks=["catchall"])
 
 

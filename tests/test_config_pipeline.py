@@ -79,6 +79,27 @@ def test_unknown_stage_type_fails_at_build(spark, sf_dir):
         )
 
 
+def test_missing_required_key_fails_before_any_stage_runs(spark, sf_dir, tmp_path):
+    # the parquet checkpoint writes eagerly, so a missing key found only
+    # when the next stage builds would leave `ckpt` behind
+    ckpt = tmp_path / "ckpt"
+    checkpoint = {"type": "checkpoint", "mode": "parquet", "path": str(ckpt)}
+    bad = [
+        ([checkpoint, {"type": "regex_parser"}], "'regex_parser'.*'pattern'"),
+        ([checkpoint, {"type": "sample", "seed": 1}], "'sample'.*'k'"),
+        ([{"type": "checkpoint", "mode": "parquet"}], "'checkpoint'.*'path'"),
+        (
+            [checkpoint,
+             {"type": "logstransform", "operators": [{"type": "filter"}]}],
+            "'filter'.*'drop_where'",
+        ),
+    ]
+    for processors, match in bad:
+        with pytest.raises(ValueError, match=match):
+            cfgp.build_from_config(spark, sf_dir, {"processors": processors})
+        assert not ckpt.exists()
+
+
 def test_stage_registry_stage_types():
     collector = {
         "resource_detect", "logstransform", "regex_parser", "grok_parser",
@@ -90,9 +111,9 @@ def test_stage_registry_stage_types():
     training = {
         "quality_gate", "lang_gate", "gopher_gates", "repetition_gates",
         "checkpoint", "dedup_exact", "dedup_minhash", "span_dedup",
-        "decontaminate", "dsir_select", "pii_scrub", "sample",
-        "global_shuffle", "pack_sequences",
+        "pii_scrub", "sample", "global_shuffle",
     }
+    assert len(collector) == 22 and len(training) == 11
     assert set(cfgp.STAGE_REGISTRY) == collector | training
 
 

@@ -517,50 +517,6 @@ def test_count_connector_multi_randomized_vs_single(spark):
             assert mine == want, (name, spec)
 
 
-def test_pack_sequences_matches_python_greedy(spark):
-    """The JVM fold must equal a plain-Python next-fit reference on the
-    same per-shard order."""
-    import random
-
-    from opentelemetry_collector_contrib_spark.functions import packing
-
-    rng = random.Random(7)
-    rows = [(i, rng.randint(1, 150)) for i in range(400)]
-    df = spark.createDataFrame(rows, "doc_id long, n_tokens int")
-    budget = 100
-    out = packing.pack_sequences(df, budget=budget, num_shards=4, seed=9)
-    got = {
-        (r["shard"], r["bin_idx"]): (list(r["doc_ids"]), r["total_tokens"])
-        for r in out.collect()
-    }
-
-    # python reference: same shard/order hashes pulled from Spark
-    import pyspark.sql.functions as SF
-
-    keyed = df.select(
-        "doc_id", "n_tokens",
-        SF.pmod(SF.xxhash64("doc_id", SF.lit(9)), SF.lit(4)).alias("shard"),
-        SF.xxhash64("doc_id", SF.lit(10)).alias("o"),
-    ).collect()
-    shards: dict = {}
-    for r in sorted(keyed, key=lambda r: (r["shard"], r["o"])):
-        shards.setdefault(r["shard"], []).append((r["doc_id"], r["n_tokens"]))
-    want = {}
-    for sh, docs in shards.items():
-        bins, cur, sz = [], [], 0
-        for d, t in docs:
-            if cur and sz + t > budget:
-                bins.append((cur, sz))
-                cur, sz = [], 0
-            cur.append(d)
-            sz += t
-        if cur:
-            bins.append((cur, sz))
-        for i, (ids, tot) in enumerate(bins):
-            want[(sh, i)] = (ids, tot)
-    assert got == want
-
-
 def test_pipeline_metrics_single_pass_block(spark, sf_dir):
     """The flagship's metric block (north star: per-sink counts +
     per-tool/per-role histograms) in one multi-metric pass; its per-sink

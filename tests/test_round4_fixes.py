@@ -5,9 +5,8 @@ Each test pins one reported failure mode:
      same attrs in different order (connectors.py membership dedupe)
   2. OTTL time/duration math (LANGUAGE.md L198-218) — timestamp
      subtraction and time ± Duration must compile, * and / must not
-  3. pack_sequences with string doc ids (native id type in the struct)
-  4. proto encoder omitting pandas NaN/NaT attribute values
-  5. filelog header_pattern mixing unnamed and named capture groups
+  3. proto encoder omitting pandas NaN/NaT attribute values
+  4. filelog header_pattern mixing unnamed and named capture groups
 """
 
 from __future__ import annotations
@@ -108,26 +107,6 @@ def test_ottl_time_multiply_rejected(spark):
     # time + time is not in the rules table either
     with pytest.raises(ValueError, match="time/duration"):
         ottl.apply_statements(df, ["set(x, a + b)"])
-
-
-def test_pack_sequences_string_ids_preserved(spark):
-    """String/UUID doc ids must survive into doc_ids arrays — the old
-    cast-to-long nulled them while the docs still occupied bins."""
-    from opentelemetry_collector_contrib_spark.functions.packing import (
-        pack_sequences,
-    )
-
-    df = spark.createDataFrame(
-        [("doc-a", 60), ("doc-b", 50), ("doc-c", 40), ("doc-d", 30)],
-        ["doc_id", "n_tokens"],
-    )
-    bins = pack_sequences(
-        df, budget=100, num_shards=1, id_col="doc_id"
-    ).collect()
-    packed = [d for r in bins for d in r["doc_ids"]]
-    assert sorted(packed) == ["doc-a", "doc-b", "doc-c", "doc-d"]
-    assert all(d is not None for d in packed)
-    assert all(r["total_tokens"] <= 100 for r in bins)
 
 
 def test_proto_nan_attrs_omitted(spark, tmp_path):

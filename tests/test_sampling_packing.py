@@ -1,5 +1,5 @@
 """Training-data prep ops beyond the reference: deterministic global
-shuffle, exact/stratified sampling, sequence packing."""
+shuffle, exact/stratified sampling."""
 
 from __future__ import annotations
 
@@ -10,11 +10,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
-from opentelemetry_collector_contrib_spark.functions import (  # noqa: E402
-    packing,
-    sampling,
-)
-from opentelemetry_collector_contrib_spark.functions import text as tx  # noqa: E402
+from opentelemetry_collector_contrib_spark.functions import sampling  # noqa: E402
 from opentelemetry_collector_contrib_spark.sources import documents as docsrc  # noqa: E402
 
 
@@ -70,38 +66,6 @@ def test_stratified_sample_fractions_no_shuffle(docs):
     # deterministic under re-run
     again = sampling.stratified_sample(docs, "lang", fractions=fr, key="doc_id", seed=2)
     assert {r["doc_id"] for r in out.collect()} == {r["doc_id"] for r in again.collect()}
-
-
-def test_pack_sequences_invariants(docs):
-    with_tokens = tx.token_count(docs)
-    budget = 120
-    bins = packing.pack_sequences(
-        with_tokens, budget=budget, num_shards=8
-    ).cache()
-    rows = bins.collect()
-    # every doc appears exactly once across bins
-    packed = [d for r in rows for d in r["doc_ids"]]
-    all_ids = [r["doc_id"] for r in with_tokens.collect()]
-    assert sorted(packed) == sorted(all_ids)
-    # budget respected except single oversized docs
-    tok = {r["doc_id"]: r["n_tokens"] for r in with_tokens.collect()}
-    for r in rows:
-        assert r["total_tokens"] == sum(tok[d] for d in r["doc_ids"])
-        if r["n_docs"] > 1:
-            assert r["total_tokens"] <= budget
-        elif r["total_tokens"] > budget:
-            assert r["n_docs"] == 1  # oversized doc got its own bin
-    # determinism
-    again = packing.pack_sequences(with_tokens, budget=budget, num_shards=8)
-    assert sorted(map(tuple, (r["doc_ids"] for r in rows))) == \
-        sorted(map(tuple, (r["doc_ids"] for r in again.collect())))
-    # packing efficiency: bins are reasonably full (greedy next-fit
-    # wastes < half the space on average for docs « budget)
-    multi = [r for r in rows if r["n_docs"] > 1]
-    if multi:
-        avg_fill = sum(r["total_tokens"] for r in multi) / (budget * len(multi))
-        assert avg_fill > 0.5
-    bins.unpersist()
 
 
 def test_exact_sample_large_k_matches_small_k(docs):

@@ -43,6 +43,13 @@ def test_stream_matches_batch_per_sink_counts(spark, sf_dir, turns, tmp_path):
     # batch reference: same log-context routing table applied in batch
     tagged, sink_map = spipe.build_stream(spark, turns, sf_dir)
     from opentelemetry_collector_contrib_spark.operators import connectors
+    from opentelemetry_collector_contrib_spark.plans import pipeline
+
+    # one route table: streaming is the batch table minus the
+    # resource-context route, in the same (first-match-wins) order
+    batch_map = dict(pipeline.build(spark, sf_dir).sink_map)
+    assert batch_map.pop("incident") == ["incident"]
+    assert list(sink_map.items()) == list(batch_map.items())
 
     expect = {
         r["sink"]: r["n"]

@@ -186,74 +186,6 @@ def test_clean_corpus_repetition_gates(spark, sf_dir):
     assert len(gated_ids) < len(base_ids)
 
 
-# ---------------------------------------------------------------------------
-# round 5: benchmark decontamination
-# ---------------------------------------------------------------------------
-
-from opentelemetry_collector_contrib_spark.functions import decontam as dc  # noqa: E402
-
-
-def test_contamination_report_counts(spark):
-    """Hand-computed: doc 1 shares exactly one 3-gram with the eval set,
-    doc 2 shares none, doc 3 is a verbatim eval member (fully dirty)."""
-    corpus = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta"),          # 3-grams: abg, bgd
-            (2, "one two three four"),              # disjoint
-            (3, "alpha beta gamma"),                # == eval doc
-        ],
-        ["doc_id", "text"],
-    )
-    eval_docs = spark.createDataFrame(
-        [(100, "alpha beta gamma")], ["doc_id", "text"]
-    )
-    rep = {
-        r["doc_id"]: r
-        for r in dc.contamination_report(corpus, eval_docs, n=3).collect()
-    }
-    assert rep[1]["n_ngrams"] == 2 and rep[1]["n_contaminated"] == 1
-    assert rep[1]["contamination"] == pytest.approx(0.5)
-    assert rep[1]["contaminated"] is True
-    assert rep[2]["n_contaminated"] == 0 and rep[2]["contaminated"] is False
-    assert rep[3]["contamination"] == pytest.approx(1.0)
-
-
-def test_decontaminate_keeps_schema_and_clean_docs(spark):
-    corpus = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta", "en"),
-            (2, "one two three four", "en"),
-        ],
-        ["doc_id", "text", "lang"],
-    )
-    eval_docs = spark.createDataFrame(
-        [(100, "alpha beta gamma")], ["doc_id", "text"]
-    )
-    out = dc.decontaminate(corpus, eval_docs, n=3)
-    assert out.columns == corpus.columns
-    assert [r["doc_id"] for r in out.collect()] == [2]
-
-
-def test_contamination_min_hits_threshold(spark):
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta gamma delta")], ["doc_id", "text"]
-    )
-    eval_docs = spark.createDataFrame(
-        [(100, "alpha beta gamma")], ["doc_id", "text"]
-    )
-    rep = dc.contamination_report(corpus, eval_docs, n=3, min_hits=2).collect()[0]
-    assert rep["n_contaminated"] == 1 and rep["contaminated"] is False
-
-
-def test_contamination_eval_side_broadcast(spark):
-    """The eval n-gram set must reach the corpus via a broadcast join —
-    the corpus side never shuffles for the collision probe."""
-    corpus = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
-    eval_docs = spark.createDataFrame([(9, "a b c")], ["doc_id", "text"])
-    plan = dc.contamination_report(corpus, eval_docs)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
 # --- C4 three-sentence-span dedup (Raffel et al. 2020 §2.2) ---
 
 SPAN_DEDUP_SQL = r"""
