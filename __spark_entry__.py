@@ -642,114 +642,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.jaccard_topk_pairs(sh, topk=20)
 
 
-CORPUS_MIN_QUALITY = 0.5
-CORPUS_KEEP_LANG = "en"
-
-
-CORPUS_MIN_WORDS = 30
-
-
-def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed training-corpus prep: quality gate -> language gate ->
-    Gopher document gates (word-count bounds, symbol-to-word ratio,
-    bullet/ellipsis line fractions, alpha-word fraction; Rae et al.
-    §A1.1) -> exact dedup -> minhash-LSH near-dup removal — driven
-    through the declarative config pipeline (plans/config_pipeline.py),
-    the way a collector user would compose it."""
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    cfg = {
-        "processors": [
-            {"type": "quality_gate", "min_quality": CORPUS_MIN_QUALITY},
-            {"type": "lang_gate", "keep_lang": CORPUS_KEEP_LANG},
-            {"type": "gopher_gates", "min_words": CORPUS_MIN_WORDS},
-            {"type": "dedup_exact"},
-            {"type": "dedup_minhash", "shingle_w": SHINGLE_W,
-             "minhash_k": MINHASH_K, "lsh_bands": LSH_BANDS},
-        ]
-    }
-    docs = docsrc.documents_df(spark, sf_dir)
-    out, _ = config_pipeline.build_from_config(spark, sf_dir, cfg, source=docs)
-    return out.select("doc_id", "lang", "n_chars", "quality")
-
-
-def _corpus_oracle_sql() -> str:
-    quality = _QUALITY_EXPRS.format(h_en=_HITS["en"].replace("(t,", "(tk.t,"))
-    hits_cols = ", ".join(f"{_HITS[l]} AS h_{l}" for l in tx.STOPWORDS)
-    sig_cols = ", ".join(
-        f"min(md5('{i}:' || shingle)) AS sig_{i}" for i in range(MINHASH_K)
-    )
-    banded = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        f"md5({_PIPE_SEP.join(f'sig_{b * _R + j}' for j in range(_R))}) AS bh "
-        "FROM sig2"
-        for b in range(LSH_BANDS)
-    )
-    return f"""
-WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
-              FROM documents),
-{quality.strip().rstrip()},
-quality_q AS (SELECT doc_id,
-  0.25*length_ok + 0.25*alpha_ratio + 0.25*stop_sig + 0.25*word_len_ok AS quality
-  FROM comp),
-hits AS (SELECT d.doc_id, {hits_cols}
-         FROM documents d JOIN toks tk ON d.doc_id = tk.doc_id),
-langed AS (SELECT doc_id, {_LANG_CASE} AS pred_lang FROM hits),
-gop AS (SELECT d.doc_id,
-          len(tk.t) AS nw,
-          cast(len(regexp_extract_all(d.text, '#|\\.\\.\\.|…')) AS double)
-            / greatest(len(tk.t), 1) AS sym_ratio,
-          cast(len(list_filter(list_filter(string_split(d.text, chr(10)),
-                 x -> trim(x) <> ''), x -> regexp_matches(trim(x), '^[-*•‣▪]')))
-            AS double)
-            / greatest(len(list_filter(string_split(d.text, chr(10)),
-                 x -> trim(x) <> '')), 1) AS bullet_frac,
-          cast(len(list_filter(list_filter(string_split(d.text, chr(10)),
-                 x -> trim(x) <> ''),
-                 x -> regexp_matches(rtrim(x), '(\\.\\.\\.|…)$'))) AS double)
-            / greatest(len(list_filter(string_split(d.text, chr(10)),
-                 x -> trim(x) <> '')), 1) AS ell_frac,
-          cast(len(list_filter(tk.t, x -> regexp_matches(x, '[a-z]')))
-            AS double) / greatest(len(tk.t), 1) AS alpha_w_frac
-        FROM documents d JOIN toks tk ON d.doc_id = tk.doc_id),
-gated AS (SELECT d.doc_id, d.lang, d.n_chars, d.text, q.quality
-          FROM documents d
-          JOIN quality_q q ON d.doc_id = q.doc_id
-          JOIN langed l ON d.doc_id = l.doc_id
-          JOIN gop g ON d.doc_id = g.doc_id
-          WHERE q.quality >= {CORPUS_MIN_QUALITY}
-            AND l.pred_lang = '{CORPUS_KEEP_LANG}'
-            AND g.nw BETWEEN {CORPUS_MIN_WORDS} AND 100000
-            AND g.sym_ratio <= 0.1
-            AND g.bullet_frac <= 0.9
-            AND g.ell_frac <= 0.3
-            AND g.alpha_w_frac >= 0.8),
-hashed AS (SELECT *, md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS h
-           FROM gated),
-keepx AS (SELECT h, min(doc_id) AS doc_id FROM hashed GROUP BY h),
-exact AS (SELECT hashed.* FROM hashed JOIN keepx USING (h, doc_id)),
-toks2 AS (SELECT e.doc_id, regexp_extract_all(lower(e.text), '[a-z0-9]+') AS t
-          FROM exact e),
-sh2 AS (SELECT doc_id, shingle FROM (
-          SELECT doc_id, unnest(list_transform(
-            generate_series(1, greatest(len(t) - {SHINGLE_W - 1}, 1)),
-            i -> array_to_string(t[i:i+{SHINGLE_W - 1}], ' '))) AS shingle
-          FROM toks2) WHERE shingle <> ''),
-sig2 AS (SELECT doc_id, {sig_cols} FROM sh2 GROUP BY doc_id),
-banded2 AS ({banded}),
-capped2 AS (SELECT * FROM banded2
-            QUALIFY row_number() OVER (PARTITION BY band, bh ORDER BY doc_id)
-            <= 1000),
-pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM capped2 a JOIN capped2 b
-          ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-drops AS (SELECT DISTINCT doc_b FROM pairs)
-SELECT e.doc_id, e.lang, e.n_chars, e.quality
-FROM exact e LEFT JOIN drops p ON e.doc_id = p.doc_b
-WHERE p.doc_b IS NULL
-"""
-
-
 def _repetition_oracle_sql() -> str:
     """DuckDB re-implementation of functions/text.py repetition_signals:
     same term families (word {2,3,4,5,10}-grams + non-blank lines, n=0
@@ -813,95 +705,6 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table — dup-line fractions + top/dup n-gram character
     fractions, one scan + one explode (functions/text.py)."""
     return tx.repetition_signals(docsrc.documents_df(spark, sf_dir))
-
-
-SAMPLE_K, SAMPLE_FRAC = 30, 0.2
-
-
-def q_sample_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic sampling + global shuffle (functions/sampling.py),
-    oracle-checked via invariants: the hash-ordered selections cannot be
-    replayed in SQL (DuckDB has no xxhash64), but per-stratum exact
-    counts, membership ⊂ input, seed-stability (same seed → same rows),
-    and shuffle order-stability (output order == seeded hash order) are
-    all exactly predictable. Epoch-scale ops a training pipeline runs
-    every run; deterministic under task retries by construction."""
-    from opentelemetry_collector_contrib_spark.functions import sampling as sp
-
-    docs = docsrc.documents_df(spark, sf_dir).select("doc_id", "lang")
-    base = docs.groupBy("lang").agg(F.count("*").alias("_n"))
-
-    def _per_lang(sample: DataFrame, tag: str) -> DataFrame:
-        return sample.groupBy("lang").agg(F.count("*").alias(f"n_{tag}"))
-
-    # stratified exact-k: twice with the same seed (stability) + member
-    ex1 = sp.stratified_sample(docs, "lang", k=SAMPLE_K, key="doc_id", seed=7)
-    ex2 = sp.stratified_sample(docs, "lang", k=SAMPLE_K, key="doc_id", seed=7)
-    ex_stable = _per_lang(
-        ex1.join(ex2, ["doc_id", "lang"]), "ex_stable"
-    )
-    ex_member = _per_lang(ex1.join(docs, ["doc_id", "lang"]), "ex_member")
-    # stratified fractions: zero-shuffle hash-threshold filter
-    fr1 = sp.stratified_sample(
-        docs, "lang", fractions={
-            r["lang"]: SAMPLE_FRAC for r in base.select("lang").collect()
-        }, key="doc_id", seed=11,
-    )
-    fr2 = sp.stratified_sample(
-        docs, "lang", fractions={
-            r["lang"]: SAMPLE_FRAC for r in base.select("lang").collect()
-        }, key="doc_id", seed=11,
-    )
-    fr_n = _per_lang(fr1, "fr")
-    fr_stable = _per_lang(fr1.join(fr2, ["doc_id", "lang"]), "fr_stable")
-    # global exact-k: membership + stability booleans folded per lang
-    g1 = sp.exact_sample(docs, 100, key="doc_id", seed=13)
-    g2 = sp.exact_sample(docs, 100, key="doc_id", seed=13)
-    g_n = _per_lang(g1, "g")
-    g_stable = _per_lang(g1.join(g2, ["doc_id", "lang"]), "g_stable")
-    # the large-k scale path (hash pre-filter + range-partitioned exact
-    # trim) must select the IDENTICAL sample as the TakeOrdered path
-    g3 = sp.exact_sample(
-        docs, 100, key="doc_id", seed=13, large_k=True, num_partitions=8
-    )
-    g_large = _per_lang(g1.join(g3, ["doc_id", "lang"]), "g_large")
-    # global shuffle: output order must BE the seeded hash order —
-    # ranks by physical output position (mono id follows the range
-    # partitioning + in-partition sort) equal ranks by hash
-    sh = sp.global_shuffle(docs, "doc_id", seed=17).withColumn(
-        "_pos", F.monotonically_increasing_id()
-    )
-    h = F.xxhash64(F.col("doc_id"), F.lit(17))
-    sh = sh.withColumn(
-        "_ok",
-        F.row_number().over(Window.orderBy("_pos"))
-        == F.row_number().over(Window.orderBy(h)),
-    )
-    sh_ok = sh.groupBy("lang").agg(
-        F.min(F.col("_ok").cast("int")).alias("_shuffle_min")
-    )
-    out = (
-        base.join(ex_stable, "lang").join(ex_member, "lang")
-        .join(fr_n, "lang").join(fr_stable, "lang")
-        .join(g_n, "lang").join(g_stable, "lang").join(g_large, "lang")
-        .join(sh_ok, "lang")
-    )
-    k = F.least(F.lit(SAMPLE_K), F.col("_n"))
-    return out.select(
-        "lang",
-        k.cast("long").alias("n_exact"),
-        (F.col("n_ex_member") == k).alias("exact_member"),
-        (F.col("n_ex_stable") == k).alias("exact_stable"),
-        # hash-threshold hit rate within a generous tolerance of the
-        # requested fraction (exact value is hash-dependent, bound isn't)
-        (
-            F.abs(F.col("n_fr") / F.col("_n") - F.lit(SAMPLE_FRAC)) < 0.1
-        ).alias("frac_tol_ok"),
-        (F.col("n_fr_stable") == F.col("n_fr")).alias("frac_stable"),
-        (F.col("n_g_stable") == F.col("n_g")).alias("gexact_stable"),
-        (F.col("n_g_large") == F.col("n_g")).alias("glarge_eq"),
-        (F.col("_shuffle_min") == 1).alias("shuffle_ordered"),
-    )
 
 
 def q_trace_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1170,7 +973,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # 46 entries (the driver contract allows at most 50), one per operator.
+    # 44 entries (the driver contract allows at most 50), one per operator.
     # Each has an oracle_sql() row of the same name.
     return {
         "parse_regex": q_parse_regex,
@@ -1185,7 +988,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "routed_rows": q_routed_rows,
         "count_multi_metric": q_count_multi_metric,
         "groupbyattrs": q_groupbyattrs,
-        "sample_invariants": q_sample_invariants,
         "sum_items_by_team": q_sum_items_by_team,
         "log_dedup": q_log_dedup,
         "filter_transformer": q_filter_transformer,
@@ -1216,7 +1018,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_minhash_lsh": q_dedup_minhash_lsh,
         "dedup_simhash": q_dedup_simhash,
         "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "corpus_clean": q_corpus_clean,
         "text_stats": q_text_stats,
         "repetition_signals": q_repetition_signals,
     }
@@ -1430,14 +1231,6 @@ def oracle_sql() -> dict[str, str]:
         "SELECT conv_id, turn_idx, tool, "
         "cast(count(*) OVER (PARTITION BY tool) AS bigint) AS group_size, "
         "text FROM parsed",
-        "sample_invariants": (
-            f"SELECT lang, cast(least({SAMPLE_K}, count(*)) AS bigint) "
-            "AS n_exact, TRUE AS exact_member, TRUE AS exact_stable, "
-            "TRUE AS frac_tol_ok, TRUE AS frac_stable, "
-            "TRUE AS gexact_stable, TRUE AS glarge_eq, "
-            "TRUE AS shuffle_ordered "
-            "FROM documents GROUP BY lang"
-        ),
         "sum_items_by_team": f"{_TD}, {_PARSED_CTE} "
         "SELECT cd.team, cast(sum(cast(regexp_extract(p.msg, 'items=(-?[0-9]+)', 1) "
         "AS bigint)) AS bigint) "
@@ -1655,7 +1448,6 @@ def oracle_sql() -> dict[str, str]:
             "JOIN sizes sb ON sb.doc_id = doc_b "
             "ORDER BY jaccard DESC, doc_a, doc_b LIMIT 20"
         ),
-        "corpus_clean": _corpus_oracle_sql(),
         "text_stats": (
             f"WITH {_TOKS_CTE}, "
             + _QUALITY_EXPRS.format(h_en=_HITS["en"].replace("(t,", "(tk.t,"))

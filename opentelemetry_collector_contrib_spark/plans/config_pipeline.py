@@ -228,229 +228,6 @@ def _stage_resource_detect(df, spark, sf_dir, cfg):
     return processors.resource_detect(df, dets)
 
 
-# --- training-data stages (functions/) — the corpus-prep ops exposed
-# with the same declarative shape as the collector operators, so one
-# config can express "clean → dedup → sample → shuffle" as a stage
-# list (the reference's operator-DAG idiom applied to the
-# data-pipeline tier). All thresholds/keys come from the stage dict.
-
-
-def _stage_quality_gate(df, spark, sf_dir, cfg):
-    from ..functions import text as tx
-
-    df = tx.quality_score(df, col=cfg.get("col", "text"))
-    return df.filter(F.col("quality") >= cfg.get("min_quality", 0.5))
-
-
-def _stage_lang_gate(df, spark, sf_dir, cfg):
-    from ..functions import text as tx
-
-    df = tx.lang_id(df, col=cfg.get("col", "text"))
-    return df.filter(F.col("pred_lang") == cfg.get("keep_lang", "en"))
-
-
-def _stage_gopher_gates(df, spark, sf_dir, cfg):
-    from ..functions import text as tx
-
-    kw = {
-        k: cfg[k]
-        for k in (
-            "min_words", "max_words", "max_symbol_word_ratio",
-            "max_bullet_line_frac", "max_ellipsis_line_frac",
-            "min_alpha_word_frac",
-        )
-        if k in cfg
-    }
-    df = tx.gopher_gates(df, col=cfg.get("col", "text"), **kw)
-    return df.filter(F.col("gopher_ok")) if cfg.get("drop", True) else df
-
-
-def _stage_repetition_gates(df, spark, sf_dir, cfg):
-    from ..functions import text as tx
-
-    # compute ONLY the n-gram families a configured threshold actually
-    # gates (same trick as functions.corpus.clean_corpus): each family
-    # rides the (doc, n, term) explode+shuffle, so defaulting to all
-    # five would push ~5x the token volume through the exchange for
-    # gates nobody asked for
-    top_ns = tuple(n for n in (2, 3, 4) if f"max_top{n}gram_frac" in cfg)
-    dup_ns = tuple(n for n in (5, 10) if f"max_dup{n}gram_frac" in cfg)
-    reps = tx.repetition_signals(
-        df, col=cfg.get("col", "text"), id_col=cfg.get("id_col", "doc_id"),
-        top_ns=top_ns, dup_ns=dup_ns,
-    )
-    cond = F.lit(True)
-    for key, col in (
-        ("max_dup_line_frac", "dup_line_frac"),
-        ("max_dup_line_char_frac", "dup_line_char_frac"),
-        ("max_top2gram_frac", "top2gram_char_frac"),
-        ("max_top3gram_frac", "top3gram_char_frac"),
-        ("max_top4gram_frac", "top4gram_char_frac"),
-        ("max_dup5gram_frac", "dup5gram_char_frac"),
-        ("max_dup10gram_frac", "dup10gram_char_frac"),
-    ):
-        if key in cfg:
-            cond = cond & (F.col(col) <= cfg[key])
-    keep = reps.filter(cond).select(cfg.get("id_col", "doc_id"))
-    return df.join(keep, cfg.get("id_col", "doc_id"), "left_semi")
-
-
-def _stage_dedup_exact(df, spark, sf_dir, cfg):
-    # keep-min-id exact dedup (same normalization as
-    # functions.dedup.exact_dedup, but row-preserving so the stage
-    # composes: the frame flows on with all its columns). ONE window
-    # shuffle on the content hash — NOT a groupBy(min) + self-join,
-    # which references the input twice and re-executes every upstream
-    # stage (the PII regex chain, gopher gates...) per action.
-    # NULL text hashes to a sentinel (its own bucket: one survivor, not
-    # silently dropped as null join keys would be), and ties on
-    # (hash, id) — duplicate-id inputs — break on the full row's JSON
-    # hash so the survivor is retry-stable, never partition-order luck.
-    from pyspark.sql import Window
-
-    id_col = cfg.get("id_col", "doc_id")
-    h = F.coalesce(
-        F.md5(
-            F.lower(F.regexp_replace(F.col(cfg.get("col", "text")), r"\s+", " "))
-        ),
-        F.lit("__null_text__"),
-    )
-    tiebreak = F.xxhash64(F.to_json(F.struct(*df.columns)))
-    w = Window.partitionBy("_h").orderBy(F.col(id_col), tiebreak)
-    return (
-        df.withColumn("_h", h)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_h", "_rn")
-    )
-
-
-def _stage_dedup_minhash(df, spark, sf_dir, cfg):
-    from ..functions import dedup as dd
-
-    id_col = cfg.get("id_col", "doc_id")
-    sh = dd.shingles(
-        df, w=cfg.get("shingle_w", 3), col=cfg.get("col", "text"),
-        id_col=id_col, distinct=False,
-    )
-    sigs = dd.minhash_signatures(sh, k=cfg.get("minhash_k", 12), id_col=id_col)
-    pairs = dd.lsh_pairs(
-        sigs, k=cfg.get("minhash_k", 12), bands=cfg.get("lsh_bands", 4)
-    )
-    if cfg.get("components", False):
-        # transitive-closure dedup: ONE survivor (min id) per connected
-        # component of the near-dup graph — pair-wise doc_b dropping
-        # under-drops chained duplicates (A~B, B~C with no A~C pair)
-        comp = dd.duplicate_components(pairs)
-        drops = comp.filter(F.col("doc_id") != F.col("component_id")).select(
-            F.col("doc_id").alias(id_col)
-        )
-    else:
-        drops = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    return df.join(drops, id_col, "left_anti")
-
-
-def _stage_sample(df, spark, sf_dir, cfg):
-    from ..functions import sampling as sp
-
-    key = cfg.get("key", "doc_id")
-    if "strata_col" in cfg:
-        return sp.stratified_sample(
-            df, cfg["strata_col"], k=cfg.get("k"),
-            fractions=cfg.get("fractions"), key=key,
-            seed=cfg.get("seed", 0),
-        )
-    return sp.exact_sample(
-        df, cfg["k"], key, seed=cfg.get("seed", 0),
-        large_k=cfg.get("large_k", False),
-        materialize=cfg.get("materialize", False),
-    )
-
-
-def _stage_global_shuffle(df, spark, sf_dir, cfg):
-    from ..functions import sampling as sp
-
-    return sp.global_shuffle(
-        df, cfg.get("key", "doc_id"), seed=cfg.get("seed", 0),
-        num_partitions=cfg.get("num_partitions"),
-    )
-
-
-#: published-recipe PII patterns (the C4/RefinedWeb-style scrub):
-#: order matters — the more-specific dotted/dashed numeric shapes (IPv4,
-#: SSN) run BEFORE the phone rule, or "255.255.255.255" reads as a phone
-#: prefix; each is a (java_regex, replacement) pair. The phone rule's
-#: last separator is INSIDE the optional digit group so a match never
-#: consumes the whitespace after the number (which would merge words),
-#: and it starts with a (?<!\w) lookbehind, NOT \b — \b cannot match
-#: between a space and '(' or '+' (both non-word), which made the
-#: parenthesized-area-code and international-prefix branches dead and
-#: leaked "(555)" / "+" in front of the mask.
-#: Bare unseparated digit runs ("5551234567") are deliberately NOT
-#: masked: a 10-digit rule is indistinguishable from unix timestamps,
-#: order ids and similar, and corrupting those in log-derived corpora
-#: costs more than the marginal recall. An explicit '+' IS unambiguous,
-#: so '+'-prefixed numbers get their own rule: country code (1-3
-#: digits), at most one [-. ] separator, then an unseparated national
-#: part — 7..15 total digits, the E.164 bounds ("+15551234567",
-#: "+123456789012345", "+44 7911123456").
-PII_PATTERNS = [
-    (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    (r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
-    (r"\b\d{3}-\d{2}-\d{4}\b", "<SSN>"),
-    (r"(?<!\w)\+\d{1,3}[-. ]?\d{6,12}\b", "<PHONE>"),
-    (r"(?<!\w)(?:\+?\d{1,3}[-. ])?(?:\(\d{2,4}\)[-. ]?)?\d{3}[-. ]\d{3,4}(?:[-. ]\d{1,4})?\b",
-     "<PHONE>"),
-    (r"\b(?:sk|pk|api|key|token)[-_][A-Za-z0-9]{16,}\b", "<KEY>"),
-]
-
-
-def _stage_pii_scrub(df, spark, sf_dir, cfg):
-    """Mask common PII in the text column — emails, phone numbers,
-    IPv4s, SSN-shaped ids, API-key-shaped tokens. Pure chained
-    ``regexp_replace`` (JVM, codegen) so the scrub rides the same scan
-    as its neighbors; pass ``patterns`` to override the default list."""
-    col = cfg.get("col", "text")
-    out = F.col(col)
-    for pat, repl in cfg.get("patterns", PII_PATTERNS):
-        out = F.regexp_replace(out, pat, repl)
-    return df.withColumn(col, out)
-
-
-def _stage_checkpoint(df, spark, sf_dir, cfg):
-    """Materialization boundary. Some training-data stages are
-    multi-pass over their input (minhash components iteration, any
-    stage pair that both scan the frame): without a boundary each pass
-    re-executes the entire upstream DAG, turning a linear pipeline into
-    a quadratic one. A real deployment writes intermediate tables
-    between phases — this stage is that, declaratively. ``mode:
-    parquet`` (+ ``path``) is the durable cluster form; the default
-    ``localCheckpoint`` keeps the boundary in executor storage (fast,
-    non-durable)."""
-    if cfg.get("mode") == "parquet":
-        df.write.mode("overwrite").parquet(cfg["path"])
-        return spark.read.parquet(cfg["path"])
-    return df.localCheckpoint(eager=cfg.get("eager", True))
-
-
-def _stage_span_dedup(df, spark, sf_dir, cfg):
-    """C4 three-sentence-span dedup (Raffel et al. 2020 §2.2) as a
-    composable stage: REWRITES the text column in place (first global
-    occurrence of a span survives, later ones are cut) and drops
-    documents the rewrite empties. Other columns flow through via the
-    id join."""
-    from ..functions import dedup as dd
-
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("col", "text")
-    rewritten = dd.span_dedup(
-        df, col=col, id_col=id_col, span=cfg.get("span", 3)
-    )
-    return df.drop(col).join(
-        rewritten.select(id_col, F.col("clean_text").alias(col)), id_col
-    )
-
-
 def _stage_logstransform(df, spark, sf_dir, cfg):
     """logstransform processor (processor/logstransformprocessor/
     config.go:18-26: a processor whose config embeds a stanza operator
@@ -491,23 +268,9 @@ STAGE_REGISTRY = {
     "ottl": _stage_ottl,
     "filter": _stage_filter,
     "redact": _stage_redact,
-    # training-data tier
-    "quality_gate": _stage_quality_gate,
-    "lang_gate": _stage_lang_gate,
-    "gopher_gates": _stage_gopher_gates,
-    "repetition_gates": _stage_repetition_gates,
-    "checkpoint": _stage_checkpoint,
-    "dedup_exact": _stage_dedup_exact,
-    "dedup_minhash": _stage_dedup_minhash,
-    "span_dedup": _stage_span_dedup,
-    "pii_scrub": _stage_pii_scrub,
-    "sample": _stage_sample,
-    "global_shuffle": _stage_global_shuffle,
 }
 
-#: config keys a stage reads without a default, checked before any stage
-#: runs; ``sample`` and ``checkpoint`` need a key only in one mode (see
-#: _required_keys)
+#: config keys a stage reads without a default, checked before any stage runs
 _REQUIRED_KEYS = {
     "regex_parser": ("pattern", "groups"),
     "grok_parser": ("pattern",),
@@ -521,14 +284,6 @@ _REQUIRED_KEYS = {
     "filter": ("drop_where",),
     "resource_detect": ("detectors",),
 }
-
-
-def _required_keys(stage: dict) -> tuple[str, ...]:
-    if stage["type"] == "sample" and "strata_col" not in stage:
-        return ("k",)
-    if stage["type"] == "checkpoint" and stage.get("mode") == "parquet":
-        return ("path",)
-    return _REQUIRED_KEYS.get(stage["type"], ())
 
 
 def load_config(path: str) -> dict:
@@ -563,13 +318,14 @@ def build_from_config(
     lin = lineage or Lineage()
     # validate the WHOLE config before any stage runs — including
     # operators nested inside logstransform — so a typo'd type or a
-    # missing required key can never fail mid-job after upstream
-    # side-effecting stages (eager checkpoint writes) already executed
+    # missing required key in an externally supplied config fails here
+    # with the stage named, not as a bare KeyError from inside the
+    # plan build
     def _check(entries, what):
         for p in entries:
             if p["type"] not in STAGE_REGISTRY:
                 raise ValueError(f"unknown {what} type {p['type']!r}")
-            for key in _required_keys(p):
+            for key in _REQUIRED_KEYS.get(p["type"], ()):
                 if key not in p:
                     raise ValueError(
                         f"{what} {p['type']!r} is missing required key {key!r}"

@@ -23,12 +23,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: tables (from /root/testdata/sf*/) that the derivations read
-BASE_TABLES = ("events", "customer")
-
 # ---------------------------------------------------------------------------
 # transcripts: one row per turn. turn_idx is dense 0..n-1 per conv_id,
 # ordered by event_id (unique => total order, deterministic in both engines).
+# ``{events}`` is a placeholder: Spark binds it to the parquet DataFrame,
+# DuckDB to its plain ``events`` table (see oracle_ctes).
 # ---------------------------------------------------------------------------
 TRANSCRIPTS_SQL = """
 SELECT
@@ -59,7 +58,7 @@ SELECT
     WHEN 0 THEN 'bash' WHEN 1 THEN 'search'
     WHEN 2 THEN 'browser' WHEN 3 THEN 'editor' ELSE '' END AS tool,
   ts
-FROM events
+FROM {events}
 """
 
 # ---------------------------------------------------------------------------
@@ -75,7 +74,7 @@ SELECT
   CASE cast(c_custkey % 3 AS int)
     WHEN 0 THEN 'prod' WHEN 1 THEN 'staging' ELSE 'dev' END AS env,
   'region-' || cast(c_nationkey % 5 AS string) AS region
-FROM customer
+FROM {customer}
 WHERE c_custkey % 10 <> 0
 """
 
@@ -92,15 +91,12 @@ SELECT * FROM (VALUES
 """
 
 
-def register_base_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the parquet base tables as temp views (idempotent)."""
-    for name in BASE_TABLES:
-        spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
-
-
 def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_base_views(spark, sf_dir)
-    return spark.sql(TRANSCRIPTS_SQL)
+    # a DataFrame argument binds under a uuid-named view that spark.sql
+    # drops after analysis, so building a source leaves the session's
+    # temp views as they were
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return spark.sql(TRANSCRIPTS_SQL, events=events)
 
 
 def with_file_attrs(df: DataFrame) -> DataFrame:
@@ -116,8 +112,8 @@ def with_file_attrs(df: DataFrame) -> DataFrame:
 
 
 def conv_dim_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_base_views(spark, sf_dir)
-    return spark.sql(CONV_DIM_SQL)
+    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    return spark.sql(CONV_DIM_SQL, customer=customer)
 
 
 def tool_dim_df(spark: SparkSession) -> DataFrame:
@@ -125,11 +121,16 @@ def tool_dim_df(spark: SparkSession) -> DataFrame:
 
 
 def oracle_ctes(*, transcripts: bool = True, dims: bool = False) -> str:
-    """``WITH ...`` prefix for DuckDB oracle SQL using the same derivations."""
+    """``WITH ...`` prefix for DuckDB oracle SQL using the same derivations
+    over the plain ``events``/``customer`` tables."""
     parts = []
     if transcripts:
-        parts.append(f"transcripts AS ({TRANSCRIPTS_SQL})")
+        parts.append(
+            f"transcripts AS ({TRANSCRIPTS_SQL.format(events='events')})"
+        )
     if dims:
-        parts.append(f"conv_dim AS ({CONV_DIM_SQL})")
+        parts.append(
+            f"conv_dim AS ({CONV_DIM_SQL.format(customer='customer')})"
+        )
         parts.append(f"tool_dim AS ({TOOL_DIM_SQL})")
     return "WITH " + ",\n".join(parts) + "\n"

@@ -240,6 +240,25 @@ def test_csv_extra_fields_fail_parse(spark):
     assert by_line["a,b,c"] is True and by_line["a,b,c,extra"] is False
 
 
+def test_regex_parse_keeps_unicode_text(spark):
+    from opentelemetry_collector_contrib_spark.schema import (
+        PARSE_GROUPS,
+        PARSE_PATTERN,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, "2024-01-01T00:00:00Z INFO svc-1: héllo wörld 你好 🎉 items=3"),
+            (3, "чистый текст без шаблона"),
+        ],
+        ["doc_id", "text"],
+    )
+    parsed = parsers.regex_parse(df, PARSE_PATTERN, PARSE_GROUPS).collect()
+    by_id = {r["doc_id"]: r for r in parsed}
+    assert by_id[1]["parse_ok"] and "你好 🎉" in by_id[1]["msg"]
+    assert not by_id[3]["parse_ok"]
+
+
 # ---------------------------------------------------------------------------
 # filelog-style text source + multiline split (fileconsumer/config.go:84)
 # ---------------------------------------------------------------------------

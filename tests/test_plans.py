@@ -62,6 +62,38 @@ def test_pipeline_run_writes_readable_sinks(spark, sf_dir, tmp_path):
     assert total == sum(res["per_sink_counts"].values())
 
 
+def test_json_sink_write_readable(spark, sf_dir, tmp_path):
+    from opentelemetry_collector_contrib_spark.operators import connectors
+    from opentelemetry_collector_contrib_spark.plans import pipeline
+
+    res = pipeline.build(spark, sf_dir)
+    paths = connectors.write_routed(
+        res.tagged, res.sink_map, str(tmp_path), fmt="json", files_per_sink=2
+    )
+    total = sum(spark.read.json(p).count() for p in paths.values())
+    routed = connectors.routed_union(res.tagged, res.sink_map)
+    assert total == routed.count()
+
+
+def test_build_leaves_session_temp_views_unchanged(spark, sf_dir):
+    # building a plan binds its parquet inputs without touching the
+    # session's temp views: a user's own "customer" view keeps its rows
+    mine = spark.createDataFrame([(1,), (2,), (3,)], ["c_custkey"])
+    mine.createOrReplaceTempView("customer")
+
+    def temp_views():
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+    try:
+        before = temp_views()
+        res = pipeline.build(spark, sf_dir)
+        assert sum(r["n"] for r in pipeline.per_sink_counts(res).collect()) > 0
+        assert temp_views() == before
+        assert spark.table("customer").count() == 3
+    finally:
+        spark.catalog.dropTempView("customer")
+
+
 def test_resource_route_strategies_agree(spark, turns):
     routes = [
         connectors.Route(F.col("text").contains("FATAL"), ["inc"], "resource", "inc"),

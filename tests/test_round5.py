@@ -1,6 +1,5 @@
-"""Round-5 tests: the ADVICE defect fixes, the new Gopher gates, the
-uap-core bot/webview/TV UserAgent blocks, the exact_sample materialize
-lifecycle, and the config-driven training-data DAG.
+"""Round-5 tests: the ADVICE defect fixes, the new Gopher gates and the
+uap-core bot/webview/TV UserAgent blocks.
 
 ADVICE defects pinned here:
   1. filter_drop(drop_ratio) hashed map-typed columns with xxhash64 →
@@ -10,9 +9,7 @@ ADVICE defects pinned here:
      and_backups)
   3. csv_parse_dynamic raised DUPLICATE_MAP_KEY on duplicate headers
      (reference MapCSVHeaders: last value silently wins)
-  4. exact_sample(large_k=True) left the survivor frame persisted with
-     no caller handle
-  5. OTTL time ± duration truncated ns→µs toward zero via a double
+  4. OTTL time ± duration truncated ns→µs toward zero via a double
      divide (Go does exact integer ns arithmetic; floor semantics)
 """
 
@@ -31,7 +28,6 @@ from opentelemetry_collector_contrib_spark.operators import (
 from opentelemetry_collector_contrib_spark.operators.useragent import (
     user_agent_map,
 )
-from opentelemetry_collector_contrib_spark.functions import sampling as sp
 from opentelemetry_collector_contrib_spark.functions import text as tx
 
 
@@ -84,7 +80,7 @@ def test_csv_dynamic_duplicate_headers_last_wins(spark):
     assert rows["x,y,z"]["csv"] == {"x": "7", "y": "8", "z": "9"}
 
 
-# --- 5. OTTL time ± duration floor semantics -----------------------------
+# --- 4. OTTL time ± duration floor semantics -----------------------------
 
 
 def test_ottl_time_minus_submicro_duration_floors(spark):
@@ -104,27 +100,6 @@ def test_ottl_time_minus_submicro_duration_floors(spark):
         df, ['set(ts, ts + Duration("1500ns"))']
     ).collect()[0]
     assert out2["ts"] == datetime.datetime(2026, 1, 1, 0, 0, 0, 1)
-
-
-# --- 4. exact_sample materialize lifecycle -------------------------------
-
-
-def test_exact_sample_materialize_releases_cache(spark):
-    df = spark.range(0, 5000).withColumn("key", F.col("id").cast("string"))
-    base = sp.exact_sample(df, 400, "key", seed=3, large_k=True)
-    ids_base = sorted(r["id"] for r in base.collect())
-
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    mat = sp.exact_sample(
-        df, 400, "key", seed=3, large_k=True, materialize=True
-    )
-    ids_mat = sorted(r["id"] for r in mat.collect())
-    assert ids_mat == ids_base  # same sample either way
-    after = jsc.getPersistentRDDs().size()
-    # the survivor frame is unpersisted before returning; only the
-    # localCheckpoint of the (sample-sized) result itself may remain
-    assert after <= before + 1
 
 
 # --- Gopher gates --------------------------------------------------------
@@ -347,135 +322,7 @@ def test_useragent_other_rate_on_realistic_mix(spark):
     assert rate <= 1 / len(UA_CASES) + 1e-9  # only the planted unknown
 
 
-# --- config-driven training-data DAG -------------------------------------
-
-
-def test_config_pipeline_corpus_dag_matches_direct(spark, sf_dir):
-    from opentelemetry_collector_contrib_spark.functions import corpus
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-    from opentelemetry_collector_contrib_spark.sources import (
-        documents as docsrc,
-    )
-
-    docs = docsrc.documents_df(spark, sf_dir)
-    cfg = {
-        "processors": [
-            {"type": "quality_gate", "min_quality": 0.5},
-            {"type": "lang_gate", "keep_lang": "en"},
-            {"type": "gopher_gates", "min_words": 30},
-            {"type": "dedup_exact"},
-            {"type": "dedup_minhash", "shingle_w": 3, "minhash_k": 12,
-             "lsh_bands": 4},
-        ]
-    }
-    via_config, sinks = config_pipeline.build_from_config(
-        spark, sf_dir, cfg, source=docs
-    )
-    assert sinks == {}
-    direct = corpus.clean_corpus(
-        docs, min_quality=0.5, keep_lang="en", shingle_w=3, minhash_k=12,
-        lsh_bands=4, gopher={"min_words": 30},
-    )
-    got = sorted(r["doc_id"] for r in via_config.select("doc_id").collect())
-    want = sorted(r["doc_id"] for r in direct.select("doc_id").collect())
-    assert got == want
-    assert len(got) > 0
-
-
-def test_config_pipeline_sample_shuffle(spark, sf_dir):
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-    from opentelemetry_collector_contrib_spark.sources import (
-        documents as docsrc,
-    )
-
-    docs = docsrc.documents_df(spark, sf_dir)
-    cfg = {
-        "processors": [
-            {"type": "sample", "k": 40, "key": "doc_id", "seed": 5},
-            {"type": "global_shuffle", "key": "doc_id", "seed": 6},
-        ]
-    }
-    shuffled, _ = config_pipeline.build_from_config(
-        spark, sf_dir, cfg, source=docs
-    )
-    rows = shuffled.collect()
-    assert set(shuffled.columns) == set(docs.columns)
-    assert len(rows) == 40
-    # exact-k sampling without replacement: 40 distinct documents
-    assert len({r["doc_id"] for r in rows}) == 40
-
-
-def test_config_pipeline_pii_scrub_masks(spark):
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    df = spark.createDataFrame(
-        [(1, "mail bob@example.com ip 10.1.2.3 ssn 123-45-6789 "
-             "key sk_abcdefghij0123456789 call 555-123-4567")],
-        ["doc_id", "text"],
-    )
-    out, _ = config_pipeline.build_from_config(
-        spark, "", {"processors": [{"type": "pii_scrub"}]}, source=df
-    )
-    text = out.collect()[0]["text"]
-    for token in ("<EMAIL>", "<IP>", "<SSN>", "<KEY>", "<PHONE>"):
-        assert token in text, text
-    for leak in ("bob@", "10.1.2.3", "123-45-6789", "abcdefghij"):
-        assert leak not in text, text
-
-
-def test_config_pipeline_span_dedup_stage(spark):
-    from opentelemetry_collector_contrib_spark.functions import dedup as dd
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    dup = "Alpha one. Beta two. Gamma three."
-    df = spark.createDataFrame(
-        [
-            (1, dup + " Tail sentence.", "web"),
-            (2, "Opening line. " + dup + " Different end.", "book"),
-            (3, dup, "web"),
-            (4, "No repeats here. Just two sentences.", "code"),
-        ],
-        ["doc_id", "text", "source"],
-    )
-    out, sinks = config_pipeline.build_from_config(
-        spark, "", {"processors": [{"type": "span_dedup"}]}, source=df
-    )
-    assert sinks == {}
-    got = {r["doc_id"]: (r["text"], r["source"]) for r in out.collect()}
-    want = {
-        r["doc_id"]: r["clean_text"] for r in dd.span_dedup(df).collect()
-    }
-    # same survivor set and rewritten text as the direct call; the
-    # non-text column (source) flows through the stage intact
-    assert set(got) == set(want) and 3 not in got
-    for doc_id, (text, _src) in got.items():
-        assert text == want[doc_id]
-    assert got[2][1] == "book" and got[4][1] == "code"
-
-
-def test_config_pipeline_checkpoint_stage_is_transparent(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-    from opentelemetry_collector_contrib_spark.sources import (
-        documents as docsrc,
-    )
-
-    docs = docsrc.documents_df(spark, "/root/testdata/sf0.001")
-    base = [{"type": "pii_scrub"}, {"type": "dedup_exact"}]
-    plain, _ = config_pipeline.build_from_config(
-        spark, "", {"processors": base}, source=docs
-    )
-    for boundary in (
-        {"type": "checkpoint"},
-        {"type": "checkpoint", "mode": "parquet",
-         "path": str(tmp_path / "ckpt")},
-    ):
-        ck, _ = config_pipeline.build_from_config(
-            spark, "", {"processors": [base[0], boundary, base[1]]},
-            source=docs,
-        )
-        a = sorted(tuple(r) for r in plain.select("doc_id", "text").collect())
-        b = sorted(tuple(r) for r in ck.select("doc_id", "text").collect())
-        assert a == b and len(a) > 0
+# --- write_routed byte cap ----------------------------------------------
 
 
 def test_write_routed_cap_sized_by_largest_rowed_sink(spark, tmp_path):
@@ -507,90 +354,3 @@ def test_write_routed_cap_sized_by_largest_rowed_sink(spark, tmp_path):
     for sink, p in paths.items():
         for f in glob.glob(p + "/*.parquet"):
             assert os.path.getsize(f) <= 1 << 20, (sink, f)
-
-
-def test_pii_scrub_ip_not_phone_and_no_word_merge(spark):
-    # regression: the phone rule used to (a) fire before the IP rule,
-    # mislabeling dotted IPv4s, and (b) consume the separator after the
-    # number, merging adjacent words
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    df = spark.createDataFrame(
-        [(1, "ip 255.255.255.255 mid 192.168.100.1 call 555-123-4567 now "
-             "ssn 123-45-6789 end")],
-        ["doc_id", "text"],
-    )
-    out, _ = config_pipeline.build_from_config(
-        spark, "", {"processors": [{"type": "pii_scrub"}]}, source=df
-    )
-    text = out.collect()[0]["text"]
-    assert text == ("ip <IP> mid <IP> call <PHONE> now ssn <SSN> end"), text
-
-
-def test_dedup_exact_stage_single_pass_no_self_join(spark):
-    # regression: the stage used to groupBy(min)+self-join its input,
-    # re-executing every upstream stage twice per action; now one
-    # window shuffle — correctness (keep-min-id) plus plan shape
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    docs = spark.createDataFrame(
-        [(3, "Same  Text"), (1, "same text"), (2, "unique"), (7, "SAME TEXT")],
-        ["doc_id", "text"],
-    )
-    out, _ = config_pipeline.build_from_config(
-        spark, "", {"processors": [{"type": "dedup_exact"}]}, source=docs
-    )
-    assert sorted(r["doc_id"] for r in out.collect()) == [1, 2]
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan, plan
-
-
-def test_pii_scrub_paren_area_code_and_intl_prefix(spark):
-    # regression: \b can't match before '(' or '+', so "(555) 123-4567"
-    # leaked the area code and "+1 ..." leaked the plus/country code
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    df = spark.createDataFrame(
-        [(1, "a (555) 123-4567 b +1 555-123-4567 c 555-123-4567 d")],
-        ["doc_id", "text"],
-    )
-    out, _ = config_pipeline.build_from_config(
-        spark, "", {"processors": [{"type": "pii_scrub"}]}, source=df
-    )
-    assert out.collect()[0]["text"] == "a <PHONE> b <PHONE> c <PHONE> d"
-
-
-def test_dedup_exact_stage_null_text_and_duplicate_ids(spark):
-    # null text keeps exactly ONE survivor (its own sentinel bucket,
-    # not silently dropped); duplicate (hash, id) rows keep exactly one
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    docs = spark.createDataFrame(
-        [(1, None), (2, None), (3, "x"), (3, "x"), (4, "y")],
-        ["doc_id", "text"],
-    )
-    out, _ = config_pipeline.build_from_config(
-        spark, "", {"processors": [{"type": "dedup_exact"}]}, source=docs
-    )
-    rows = sorted((r["doc_id"], r["text"]) for r in out.collect())
-    assert rows == [(1, None), (3, "x"), (4, "y")]
-
-
-def test_pii_scrub_e164_bare_plus_number(spark):
-    # '+'-prefixed numbers are unambiguous PII across the E.164 range:
-    # unseparated, max-length 15-digit, and country-code-space forms all
-    # mask; bare digit runs without '+' stay (documented: a 10-digit
-    # rule would also eat unix timestamps / order ids)
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    df = spark.createDataFrame(
-        [(1, "a +15551234567 b 5551234567 c ts 1726500000 d "
-             "+123456789012345 e +44 7911123456 f")],
-        ["doc_id", "text"],
-    )
-    out, _ = config_pipeline.build_from_config(
-        spark, "", {"processors": [{"type": "pii_scrub"}]}, source=df
-    )
-    assert out.collect()[0]["text"] == (
-        "a <PHONE> b 5551234567 c ts 1726500000 d <PHONE> e <PHONE> f"
-    )

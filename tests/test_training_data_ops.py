@@ -94,32 +94,8 @@ def test_unicode_text_survives_parse_and_dedup(spark):
         (3, "чистый текст без шаблона"),
     ]
     df = spark.createDataFrame(rows_in, ["doc_id", "text"])
-    from opentelemetry_collector_contrib_spark.operators import parsers
-    from opentelemetry_collector_contrib_spark.schema import (
-        PARSE_PATTERN,
-        PARSE_GROUPS,
-    )
-
-    parsed = parsers.regex_parse(df, PARSE_PATTERN, PARSE_GROUPS).collect()
-    by_id = {r["doc_id"]: r for r in parsed}
-    assert by_id[1]["parse_ok"] and "你好 🎉" in by_id[1]["msg"]
-    assert not by_id[3]["parse_ok"]
-
     out = {r["keep_id"]: r["n_dups"] for r in dd.exact_dedup(df).collect()}
     assert out == {1: 2, 3: 1}
-
-
-def test_json_sink_write_readable(spark, sf_dir, tmp_path):
-    from opentelemetry_collector_contrib_spark.operators import connectors
-    from opentelemetry_collector_contrib_spark.plans import pipeline
-
-    res = pipeline.build(spark, sf_dir)
-    paths = connectors.write_routed(
-        res.tagged, res.sink_map, str(tmp_path), fmt="json", files_per_sink=2
-    )
-    total = sum(spark.read.json(p).count() for p in paths.values())
-    routed = connectors.routed_union(res.tagged, res.sink_map)
-    assert total == routed.count()
 
 
 def test_repetition_signals_hand_computed(spark):
@@ -170,20 +146,6 @@ def test_repetition_signals_on_documents(spark, sf_dir):
     for r in rows:
         for c in frac_cols:
             assert 0.0 <= r[c] <= 1.0, (r["doc_id"], c, r[c])
-
-
-def test_clean_corpus_repetition_gates(spark, sf_dir):
-    """Optional Gopher gates drop repetitive docs; default-off keeps
-    the original pipeline output unchanged."""
-    from opentelemetry_collector_contrib_spark.functions import corpus as cp
-
-    docs = docsrc.documents_df(spark, sf_dir)
-    base_ids = {r["doc_id"] for r in cp.clean_corpus(docs).collect()}
-    gated = cp.clean_corpus(docs, max_dup_line_frac=0.0, max_top2gram_frac=0.15)
-    gated_ids = {r["doc_id"] for r in gated.collect()}
-    assert gated_ids <= base_ids  # gates only remove
-    # the gate binds on this corpus (synthetic docs repeat templates)
-    assert len(gated_ids) < len(base_ids)
 
 
 # --- C4 three-sentence-span dedup (Raffel et al. 2020 §2.2) ---
@@ -352,30 +314,6 @@ def test_duplicate_components_matches_duckdb_closure(spark, sf_dir, tmp_path):
     )
     con.close()
     assert got == want and len(got) > 0
-
-
-def test_config_pipeline_minhash_components_drop_rule(spark):
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-
-    # three mutually-near texts that chain (1~2, 2~3) and one outlier
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    df = spark.createDataFrame(
-        [
-            (1, base),
-            (2, base.replace("today", "tomorrow")),
-            (3, base.replace("today", "tomorrow").replace("quick", "slow")),
-            (9, "completely different content about spark shuffles here"),
-        ],
-        ["doc_id", "text"],
-    )
-    out, _ = config_pipeline.build_from_config(
-        spark, "",
-        {"processors": [{"type": "dedup_minhash", "components": True}]},
-        source=df,
-    )
-    kept = sorted(r["doc_id"] for r in out.select("doc_id").collect())
-    # one survivor (min id) per near-dup component + the outlier
-    assert kept[0] == 1 and 9 in kept and 2 not in kept
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3, 4])
