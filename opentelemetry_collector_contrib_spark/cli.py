@@ -43,7 +43,8 @@ def main(argv: list[str] | None = None) -> int:
                          "maps to the processingTime trigger)")
     ap.add_argument("--with-histograms", action="store_true",
                     help="emit the full metric block (per-sink counts + "
-                         "per-sink/role + per-tool histograms, one pass)")
+                         "per-sink/role + per-tool histograms, one "
+                         "aggregate over the written sinks)")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession

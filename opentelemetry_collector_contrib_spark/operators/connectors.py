@@ -195,9 +195,10 @@ def write_routed(
 ) -> dict[str, str]:
     """Exporter stage: one partitioned write fans rows out to per-sink
     tables (fileexporter group_by semantics,
-    exporter/fileexporter/grouping_file_exporter.go:116-152). A single
-    job, partitioned by ``sink`` — the shuffle-free analog of N filtered
-    writes.
+    exporter/fileexporter/grouping_file_exporter.go:116-152). One write
+    action, partitioned by ``sink`` — the shuffle-free analog of N
+    filtered writes (AQE still runs it as several jobs: one per
+    broadcast and shuffle stage of the input plan, then the write).
 
     ``files_per_sink`` bounds output file count (the batchperresourceattr
     re-batching analog, pkg/batchperresourceattr): without it, every

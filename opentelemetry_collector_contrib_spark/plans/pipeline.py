@@ -17,13 +17,15 @@ Scale design (the same plan on local[N] or a cluster):
     span from scan to tag when using the native parse path.
   * Order-sensitive stages (recombine, per-turn equality) sort an array
     per group instead of trusting shuffle order — correct on any cluster.
-  * Aggregations are map-side partial; per-sink writes use a single
-    partitionBy("sink") job rather than N filtered scans.
+  * Aggregations are map-side partial; per-sink writes use one
+    partitionBy("sink") write rather than N filtered scans.
+  * ``run`` routes the input once: the write (or, without an output
+    dir, one metric aggregate) is the only pass over the fact table.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -112,6 +114,21 @@ def build(
     return PipelineResult(parsed, enriched, tagged, sink_map, lin)
 
 
+#: The north star's aggregate block as one countconnector config: per-sink
+#: record counts plus per-sink/per-role and per-tool turn histograms.
+METRICS = {
+    "records.per_sink": connectors.MetricSpec(attrs=["sink"]),
+    "turns.per_sink_role": connectors.MetricSpec(attrs=["sink", "role"]),
+    "turns.per_tool": connectors.MetricSpec(
+        attrs=["tool"], defaults={"tool": "none"}
+    ),
+}
+
+#: the only columns METRICS reads: the read-back schema of written sinks
+#: (explicit, so reading them needs no schema-inference job)
+METRICS_SCHEMA = "role string, tool string, sink string"
+
+
 def per_sink_counts(result: PipelineResult) -> DataFrame:
     """countconnector over the routed stream: rows per sink."""
     routed = connectors.routed_union(result.tagged, result.sink_map)
@@ -119,23 +136,11 @@ def per_sink_counts(result: PipelineResult) -> DataFrame:
 
 
 def pipeline_metrics(result: PipelineResult) -> DataFrame:
-    """The north star's batch-processor aggregate block — per-sink record
-    counts PLUS per-sink/per-role and per-tool turn histograms — as ONE
-    multi-metric countconnector pass over the routed stream (one scan,
-    one shuffle; see connectors.count_connector_multi)."""
+    """The ``METRICS`` block as ONE multi-metric countconnector pass over
+    the routed stream (one scan, one shuffle; see
+    connectors.count_connector_multi)."""
     routed = connectors.routed_union(result.tagged, result.sink_map)
-    return connectors.count_connector_multi(
-        routed,
-        {
-            "records.per_sink": connectors.MetricSpec(attrs=["sink"]),
-            "turns.per_sink_role": connectors.MetricSpec(
-                attrs=["sink", "role"]
-            ),
-            "turns.per_tool": connectors.MetricSpec(
-                attrs=["tool"], defaults={"tool": "none"}
-            ),
-        },
-    )
+    return connectors.count_connector_multi(routed, METRICS)
 
 
 def run(
@@ -148,16 +153,35 @@ def run(
 ) -> dict:
     """Execute end-to-end; optionally write per-sink tables; return metrics.
 
-    ``with_histograms`` adds the full metric block (per-sink counts +
-    per-sink/role + per-tool histograms) computed in one extra pass via
-    the multi-metric connector, under ``out["metrics"]``."""
+    The routed rows are computed once: by the write with ``out_dir``, by
+    one ``METRICS`` aggregate without it. With ``out_dir`` the ``METRICS``
+    block comes from one column-pruned aggregate over the parquet just
+    written. ``per_sink_counts`` is its ``records.per_sink`` slice;
+    ``with_histograms`` adds the whole block under ``out["metrics"]``.
+    ``lineage`` holds the stage counters of the routed action."""
     result = build(spark, sf_dir, parse_mode=parse_mode)
-    counts = {r["sink"]: r["n"] for r in per_sink_counts(result).collect()}
+    if out_dir:
+        # No files_per_sink: its repartition would put the lineage observes
+        # in a shuffle map stage, where a retried stage counts rows twice.
+        paths = connectors.write_routed(result.tagged, result.sink_map, out_dir)
+        written = spark.read.schema(METRICS_SCHEMA).parquet(
+            f"{out_dir.rstrip('/')}/routed"
+        )
+        block = connectors.count_connector_multi(written, METRICS)
+    else:
+        block = pipeline_metrics(result)
+    metrics = block.collect()
+    counts = dict(
+        sorted(
+            (r["sink"], r["value"])
+            for r in metrics
+            if r["metric"] == "records.per_sink"
+        )
+    )
     out = {"per_sink_counts": counts}
     if with_histograms:
-        out["metrics"] = [r.asDict() for r in pipeline_metrics(result).collect()]
+        out["metrics"] = [r.asDict() for r in metrics]
     if out_dir:
-        paths = connectors.write_routed(result.tagged, result.sink_map, out_dir)
         out["sink_paths"] = paths
     out["lineage"] = result.lineage.collect()
     return out

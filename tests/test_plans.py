@@ -41,14 +41,16 @@ def test_checkpoint_run_stage_skips_completed(spark, turns, tmp_path):
     assert len(calls) == 2  # force re-runs
 
 
-def test_lineage_counts_per_stage(spark, sf_dir):
+def test_lineage_counts_per_stage(spark, sf_dir, tmp_path):
     result = pipeline.build(spark, sf_dir)
     pipeline.per_sink_counts(result).collect()
-    lin = result.lineage.collect()
-    assert lin["parse"]["rows"] == 1000
-    assert lin["parse"]["parse_errors"] == 300  # 30% freeform by construction
-    assert lin["enrich"]["rows"] == 1000
-    assert lin["route"]["rows"] == 1000
+    # run() reports the lineage of its write, the job that made the output
+    from_write = pipeline.run(spark, sf_dir, out_dir=str(tmp_path))["lineage"]
+    for lin in (result.lineage.collect(), from_write):
+        assert lin["parse"]["rows"] == 1000
+        assert lin["parse"]["parse_errors"] == 300  # 30% freeform by construction
+        assert lin["enrich"]["rows"] == 1000
+        assert lin["route"]["rows"] == 1000
 
 
 def test_pipeline_run_writes_readable_sinks(spark, sf_dir, tmp_path):
@@ -60,6 +62,56 @@ def test_pipeline_run_writes_readable_sinks(spark, sf_dir, tmp_path):
         assert n == res["per_sink_counts"][sink]
         total += n
     assert total == sum(res["per_sink_counts"].values())
+
+
+def test_run_outputs_agree_across_paths(spark, sf_dir, tmp_path):
+    """run()'s counts and metric block, read back from its written sinks or
+    aggregated in memory, equal the standalone connectors on a fresh
+    build, for both parse paths."""
+    from collections import Counter
+
+    def block(rows):
+        return Counter(tuple(sorted(r.items())) for r in rows)
+
+    result = pipeline.build(spark, sf_dir)
+    counts = pipeline.per_sink_counts(result).collect()
+    want_counts = {r["sink"]: r["n"] for r in counts}
+    metrics = pipeline.pipeline_metrics(result).collect()
+    want_metrics = block(r.asDict() for r in metrics)
+    assert len(want_metrics) == 30
+    for out_dir, mode in [
+        (str(tmp_path / "native"), "native"),
+        (None, "native"),
+        (str(tmp_path / "arrow"), "arrow"),
+    ]:
+        res = pipeline.run(
+            spark, sf_dir, out_dir, parse_mode=mode, with_histograms=True
+        )
+        assert res["per_sink_counts"] == want_counts, (out_dir, mode)
+        assert block(res["metrics"]) == want_metrics, (out_dir, mode)
+
+
+def test_run_is_one_routed_pass(spark, sf_dir, tmp_path):
+    """A warm run(out_dir, with_histograms=True) is one routed write plus
+    one pruned aggregate over its output, and compiles no new classes."""
+    sc = spark.sparkContext
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+    try:
+        for i in range(2):
+            group = f"one-routed-pass-{i}"
+            sc.setJobGroup(group, group)
+            before = compiles.getCount()
+            pipeline.run(
+                spark, sf_dir, out_dir=str(tmp_path / str(i)), with_histograms=True
+            )
+            recompiled = compiles.getCount() - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # 12 measured at sf0.001 (local[8], AQE); chaining per_sink_counts,
+    # pipeline_metrics and write_routed took 26
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 12
+    assert recompiled == 0
 
 
 def test_json_sink_write_readable(spark, sf_dir, tmp_path):
