@@ -607,106 +607,6 @@ def q_ottl_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# training-data pipeline queries (documents corpus)
-# ---------------------------------------------------------------------------
-
-from opentelemetry_collector_contrib_spark.functions import (  # noqa: E402
-    dedup as dd,
-    text as tx,
-)
-from opentelemetry_collector_contrib_spark.sources import documents as docsrc  # noqa: E402
-
-MINHASH_K, LSH_BANDS, SHINGLE_W = 12, 4, 3
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.exact_dedup(docsrc.documents_df(spark, sf_dir))
-
-
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = docsrc.documents_df(spark, sf_dir)
-    # distinct=False: minhash's per-permutation MIN is duplicate-
-    # insensitive, so the dedup shuffle is skipped
-    sh = dd.shingles(docs, w=SHINGLE_W, distinct=False)
-    sigs = dd.minhash_signatures(sh, k=MINHASH_K)
-    return dd.lsh_pairs(sigs, k=MINHASH_K, bands=LSH_BANDS)
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.simhash(docsrc.documents_df(spark, sf_dir))
-
-
-def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = dd.shingles(docsrc.documents_df(spark, sf_dir), w=SHINGLE_W)
-    return dd.jaccard_topk_pairs(sh, topk=20)
-
-
-def _repetition_oracle_sql() -> str:
-    """DuckDB re-implementation of functions/text.py repetition_signals:
-    same term families (word {2,3,4,5,10}-grams + non-blank lines, n=0
-    marks lines), same per-(doc, n) rollup (top cover by (count, len)
-    lexicographic max — Spark's max(struct)), same character-weighted
-    Gopher fractions, zero rows preserved via the distinct-ids left
-    join. The Spark side shuffles xxhash64(term) ids; the oracle counts
-    the term strings themselves — identical counts absent a 64-bit
-    collision (odds ~1e-7 at sf0.01)."""
-    gram_selects = []
-    for n in (2, 3, 4, 5, 10):
-        gram_selects.append(
-            f"SELECT doc_id, {n} AS n, unnest(list_transform("
-            f"generate_series(1, len(t) - {n - 1}), "
-            f"i -> array_to_string(t[i:i+{n - 1}], ' '))) AS term "
-            f"FROM toks WHERE len(t) >= {n}"
-        )
-    gram_selects.append(
-        "SELECT doc_id, 0 AS n, unnest(list_filter("
-        "string_split(text, chr(10)), x -> trim(x) <> '')) AS term "
-        "FROM documents"
-    )
-    terms = " UNION ALL ".join(gram_selects)
-    return f"""
-WITH {_TOKS_CTE},
-terms AS ({terms}),
-counted AS (SELECT doc_id, n, term, count(*) AS c, length(term) AS len
-            FROM terms GROUP BY doc_id, n, term),
-per_n AS (SELECT doc_id, n,
-            sum(c * len) AS tot_chars,
-            sum(CASE WHEN c > 1 THEN c * len ELSE 0 END) AS dup_chars,
-            sum(c) AS n_terms,
-            sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup_terms
-          FROM counted GROUP BY doc_id, n),
-ranked AS (SELECT doc_id, n, c * len AS cover,
-             row_number() OVER (PARTITION BY doc_id, n
-                                ORDER BY c DESC, len DESC) AS rn
-           FROM counted),
-mets AS (SELECT p.doc_id, p.n,
-           cast(t.cover AS double) / greatest(p.tot_chars, 1) AS top_frac,
-           cast(p.dup_chars AS double) / greatest(p.tot_chars, 1) AS dup_frac,
-           cast(p.dup_terms AS double) / greatest(p.n_terms, 1) AS dup_term_frac
-         FROM per_n p JOIN (SELECT * FROM ranked WHERE rn = 1) t
-         ON p.doc_id = t.doc_id AND p.n = t.n)
-SELECT d.doc_id,
-  coalesce(max(CASE WHEN n = 2 THEN top_frac END), 0.0) AS top2gram_char_frac,
-  coalesce(max(CASE WHEN n = 3 THEN top_frac END), 0.0) AS top3gram_char_frac,
-  coalesce(max(CASE WHEN n = 4 THEN top_frac END), 0.0) AS top4gram_char_frac,
-  coalesce(max(CASE WHEN n = 5 THEN dup_frac END), 0.0) AS dup5gram_char_frac,
-  coalesce(max(CASE WHEN n = 10 THEN dup_frac END), 0.0) AS dup10gram_char_frac,
-  coalesce(max(CASE WHEN n = 0 THEN dup_term_frac END), 0.0) AS dup_line_frac,
-  coalesce(max(CASE WHEN n = 0 THEN dup_frac END), 0.0) AS dup_line_char_frac
-FROM (SELECT DISTINCT doc_id FROM documents) d
-LEFT JOIN mets m ON d.doc_id = m.doc_id
-GROUP BY d.doc_id
-"""
-
-
-def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher repetition metrics (Rae et al. 2021 §A1.1) over the
-    documents table — dup-line fractions + top/dup n-gram character
-    fractions, one scan + one explode (functions/text.py)."""
-    return tx.repetition_signals(docsrc.documents_df(spark, sf_dir))
-
-
 def q_trace_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """trace_parser (operator/helper/trace.go): hex ids -> bytes. Ids
     synthesized deterministically (md5 of conv_id = 16-byte trace id,
@@ -954,26 +854,8 @@ def q_ottl_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite text-analysis stage: language ID + quality scoring +
-    token counting + rolling-hash fingerprint in ONE narrow projection
-    (one scan — how a corpus-prep pipeline actually runs them).
-    lang_id was a standalone board row through round 4; folded here
-    (lang/pred_lang columns) to free a driver slot."""
-    docs = docsrc.documents_df(spark, sf_dir)
-    out = tx.lang_id(docs)
-    out = tx.quality_score(out)
-    out = tx.bpe_ish_count(tx.token_count(out))
-    out = tx.doc_fingerprint(out, w=5)
-    return out.select(
-        "doc_id", "lang", "pred_lang",
-        "length_ok", "alpha_ratio", "stop_sig", "word_len_ok",
-        "quality", "n_tokens", "n_bpe", "fingerprint", "exact_hash",
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # 44 entries (the driver contract allows at most 50), one per operator.
+    # 38 entries (the driver contract allows at most 50), one per operator.
     # Each has an oracle_sql() row of the same name.
     return {
         "parse_regex": q_parse_regex,
@@ -1014,12 +896,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "otlpjson_connector": q_otlpjson_connector,
         "otlpjson_envelope": q_otlpjson_envelope,
         "ottl_extended": q_ottl_extended,
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "text_stats": q_text_stats,
-        "repetition_signals": q_repetition_signals,
     }
 
 
@@ -1083,82 +959,6 @@ _SEV_CASE = " ".join(
     [f"WHEN '{k}' THEN {v}" for k, v in SEVERITY_TEXT_TO_NUM.items()]
     + [f"WHEN '{a}' THEN {SEVERITY_TEXT_TO_NUM[c]}" for a, c in SEVERITY_ALIASES.items()]
 )
-
-
-# --- training-data op oracles (documents is a pre-registered
-# views in the DuckDB harness; dialect-portable md5/regex constructions
-# mirror the Spark stages exactly) ---
-
-_TOKS_CTE = (
-    "toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t "
-    "FROM documents)"
-)
-
-_SHINGLE_CTE = (
-    "sh AS (SELECT DISTINCT doc_id, shingle FROM ("
-    "  SELECT doc_id, unnest(list_transform("
-    f"    generate_series(1, greatest(len(t) - {SHINGLE_W - 1}, 1)), "
-    f"    i -> array_to_string(t[i:i+{SHINGLE_W - 1}], ' '))) AS shingle "
-    "  FROM toks) WHERE shingle <> '')"
-)
-
-_SIG_CTE = "sig AS (SELECT doc_id, " + ", ".join(
-    f"min(md5('{i}:' || shingle)) AS sig_{i}" for i in range(MINHASH_K)
-) + " FROM sh GROUP BY doc_id)"
-
-_R = MINHASH_K // LSH_BANDS
-_PIPE_SEP = " || '|' || "
-_BANDED_CTE = "banded AS (" + " UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band, "
-    f"md5({_PIPE_SEP.join(f'sig_{b * _R + j}' for j in range(_R))}) AS bh FROM sig"
-    for b in range(LSH_BANDS)
-) + ")"
-
-_SIMHASH_BITS = 16
-_SIMHASH_SUMS = ", ".join(
-    f"sum(CASE WHEN substr(h, {j + 1}, 1) IN "
-    "('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS b" + str(j)
-    for j in range(_SIMHASH_BITS)
-)
-_SIMHASH_FP = " || ".join(
-    f"CASE WHEN b{j} > 0 THEN '1' ELSE '0' END" for j in range(_SIMHASH_BITS)
-)
-
-_HITS = {
-    lang: (
-        "len(list_filter(t, x -> list_contains(["
-        + ", ".join(f"'{w}'" for w in ws)
-        + "], x)))"
-    )
-    for lang, ws in tx.STOPWORDS.items()
-}
-_LANG_CASE = (
-    "CASE WHEN greatest(" + ", ".join(f"h_{l}" for l in tx.STOPWORDS) + ") = 0 "
-    "THEN 'und' "
-    + " ".join(
-        f"WHEN h_{l} = greatest(" + ", ".join(f"h_{m}" for m in tx.STOPWORDS) + ") "
-        f"THEN '{l}'"
-        for l in tx.STOPWORDS
-    )
-    + " END"
-)
-
-_QUALITY_EXPRS = """
-  sel AS (SELECT d.doc_id,
-    cast(length(d.text) AS double) AS chars,
-    cast(length(regexp_replace(d.text, '[^A-Za-z0-9]', '', 'g')) AS double) AS alpha,
-    cast(len(tk.t) AS double) AS n_tok,
-    cast({h_en} AS double) AS h_en
-  FROM documents d JOIN (SELECT doc_id, t FROM toks) tk ON d.doc_id = tk.doc_id),
-  comp AS (SELECT doc_id,
-    CASE WHEN chars < 20 THEN chars/20 WHEN chars > 20000 THEN 20000.0/chars
-         ELSE 1.0 END AS length_ok,
-    CASE WHEN chars > 0 THEN alpha/chars ELSE 0.0 END AS alpha_ratio,
-    least(1.0, h_en/5) AS stop_sig,
-    CASE WHEN n_tok > 0 AND alpha/n_tok >= 3 AND alpha/n_tok <= 12
-         THEN 1.0 ELSE 0.0 END AS word_len_ok
-  FROM sel)
-"""
 
 
 def oracle_sql() -> dict[str, str]:
@@ -1413,63 +1213,4 @@ def oracle_sql() -> dict[str, str]:
         "regexp_replace(text, 'user=[0-9]+', 'user=****', 'g') AS redacted, "
         "CASE WHEN role = 'assistant' THEN sha256(conv_id) END AS conv_hash "
         "FROM transcripts",
-        # --- training-data ops ---
-        "dedup_exact": (
-            "SELECT md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS content_hash, "
-            "min(doc_id) AS keep_id, count(*) AS n_dups FROM documents GROUP BY 1"
-        ),
-        # capped CTE mirrors lsh_pairs' max_band_size=1000 hot-band guard
-        # (deterministic doc_id-ordered truncation) so engine and oracle
-        # agree under ANY band-size distribution, not just small ones
-        "dedup_minhash_lsh": (
-            f"WITH {_TOKS_CTE}, {_SHINGLE_CTE}, {_SIG_CTE}, {_BANDED_CTE}, "
-            "capped AS (SELECT * FROM banded "
-            "QUALIFY row_number() OVER (PARTITION BY band, bh ORDER BY doc_id) "
-            "<= 1000) "
-            "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
-            "FROM capped a JOIN capped b "
-            "ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id"
-        ),
-        "dedup_simhash": (
-            "WITH tok AS (SELECT doc_id, md5(unnest(regexp_extract_all(lower(text), "
-            "'[a-z0-9]+'))) AS h FROM documents), "
-            f"b AS (SELECT doc_id, {_SIMHASH_SUMS} FROM tok GROUP BY doc_id) "
-            f"SELECT doc_id, {_SIMHASH_FP} AS simhash FROM b"
-        ),
-        "dedup_ngram_jaccard": (
-            f"WITH {_TOKS_CTE}, {_SHINGLE_CTE}, "
-            "sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id), "
-            "common_t AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-            "count(*) AS common FROM sh a JOIN sh b "
-            "ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2) "
-            "SELECT doc_a, doc_b, common, "
-            "cast(common AS double) / (sa.sz + sb.sz - common) AS jaccard "
-            "FROM common_t JOIN sizes sa ON sa.doc_id = doc_a "
-            "JOIN sizes sb ON sb.doc_id = doc_b "
-            "ORDER BY jaccard DESC, doc_a, doc_b LIMIT 20"
-        ),
-        "text_stats": (
-            f"WITH {_TOKS_CTE}, "
-            + _QUALITY_EXPRS.format(h_en=_HITS["en"].replace("(t,", "(tk.t,"))
-            + ", hits AS (SELECT d.doc_id, d.lang, "
-            + ", ".join(f"{_HITS[l]} AS h_{l}" for l in tx.STOPWORDS)
-            + " FROM documents d JOIN toks tk ON d.doc_id = tk.doc_id)"
-            + " SELECT c.doc_id, h.lang, "
-            f"{_LANG_CASE} AS pred_lang, "
-            "c.length_ok, c.alpha_ratio, c.stop_sig, "
-            "c.word_len_ok, "
-            "0.25*c.length_ok + 0.25*c.alpha_ratio + 0.25*c.stop_sig + "
-            "0.25*c.word_len_ok AS quality, "
-            "cast(len(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS int) "
-            "AS n_tokens, "
-            "cast(len(regexp_extract_all(d.text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) "
-            "AS int) AS n_bpe, "
-            "list_min(list_transform(generate_series(1, greatest(len(tk.t) - 4, 1)), "
-            "i -> md5(array_to_string(tk.t[i:i+4], ' ')))) AS fingerprint, "
-            "md5(lower(regexp_replace(d.text, '\\s+', ' ', 'g'))) AS exact_hash "
-            "FROM comp c JOIN documents d ON c.doc_id = d.doc_id "
-            "JOIN toks tk ON c.doc_id = tk.doc_id "
-            "JOIN hits h ON c.doc_id = h.doc_id"
-        ),
-        "repetition_signals": _repetition_oracle_sql(),
     }

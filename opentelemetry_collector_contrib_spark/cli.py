@@ -7,8 +7,16 @@ multi-executor cluster):
     spark-submit --py-files /tmp/otelspark.zip \
         --conf spark.sql.adaptive.enabled=true \
         opentelemetry_collector_contrib_spark/cli.py \
-        --input-dir /data/sf --out-dir /data/out [--streaming] \
-        [--checkpoint-dir /data/ck] [--parse-mode native|arrow]
+        --input-dir /data/sf --out-dir /data/out \
+        [--parse-mode native|arrow] [--with-histograms]
+
+Streaming mode adds ``--streaming --checkpoint-dir /data/ck`` and takes
+two more stream-only flags, ``--dims-dir`` and ``--flush-interval``
+(seconds; without it the stream processes the files present, then
+stops). ``--parse-mode`` and ``--with-histograms`` are batch-only. Every
+flag is checked before the SparkSession starts: a stream-only flag in
+batch mode, a batch-only flag in streaming mode or ``--streaming``
+without ``--checkpoint-dir`` exits with status 2.
 
 In local mode (no cluster manager) the same file runs directly:
     python -m opentelemetry_collector_contrib_spark.cli --input-dir ... --out-dir ...
@@ -31,26 +39,40 @@ def main(argv: list[str] | None = None) -> int:
                     help="directory with the base parquet tables (or, with "
                          "--streaming, transcript-shaped parquet files)")
     ap.add_argument("--out-dir", required=True)
-    ap.add_argument("--dims-dir", default=None,
-                    help="directory for enrichment dims (default: --input-dir)")
-    ap.add_argument("--checkpoint-dir", default=None)
-    ap.add_argument("--parse-mode", choices=["native", "arrow"], default="native")
-    ap.add_argument("--streaming", action="store_true")
-    ap.add_argument("--trigger", default="availableNow",
-                    help="availableNow | processingTime:<interval>")
-    ap.add_argument("--flush-interval", type=float, default=None,
-                    help="fileexporter flush_interval seconds (streaming; "
-                         "maps to the processingTime trigger)")
+    ap.add_argument("--parse-mode", choices=["native", "arrow"], default=None,
+                    help="batch only (default: native)")
     ap.add_argument("--with-histograms", action="store_true",
-                    help="emit the full metric block (per-sink counts + "
-                         "per-sink/role + per-tool histograms, one "
+                    help="batch only: emit the full metric block (per-sink "
+                         "counts + per-sink/role + per-tool histograms, one "
                          "aggregate over the written sinks)")
+    ap.add_argument("--streaming", action="store_true")
+    ap.add_argument("--checkpoint-dir", default=None,
+                    help="streaming only (required there)")
+    ap.add_argument("--dims-dir", default=None,
+                    help="streaming only: directory for enrichment dims "
+                         "(default: --input-dir)")
+    ap.add_argument("--flush-interval", type=float, default=None,
+                    help="streaming only: fileexporter flush_interval "
+                         "seconds (a processingTime trigger; default: "
+                         "availableNow)")
     args = ap.parse_args(argv)
+
+    if args.streaming:
+        if not args.checkpoint_dir:
+            ap.error("--streaming requires --checkpoint-dir")
+        misplaced = {"--parse-mode": args.parse_mode is not None,
+                     "--with-histograms": args.with_histograms}
+    else:
+        misplaced = {"--checkpoint-dir": args.checkpoint_dir is not None,
+                     "--dims-dir": args.dims_dir is not None,
+                     "--flush-interval": args.flush_interval is not None}
+    for flag, given in misplaced.items():
+        if given:
+            ap.error(f"{flag} is {'batch' if args.streaming else 'streaming'}-only")
 
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("otelcol-spark-pipeline").getOrCreate()
-    dims = args.dims_dir or args.input_dir
 
     if args.streaming:
         # absolute fallback: spark-submit runs this FILE as __main__ (not
@@ -62,18 +84,12 @@ def main(argv: list[str] | None = None) -> int:
                 pipeline as spipe,
             )
 
-        if not args.checkpoint_dir:
-            ap.error("--streaming requires --checkpoint-dir")
         q = spipe.run_to_sinks(
             spark,
             args.input_dir,
-            dims,
+            args.dims_dir or args.input_dir,
             args.out_dir,
             args.checkpoint_dir,
-            available_now=args.trigger == "availableNow",
-            processing_time=args.trigger.split(":", 1)[-1]
-            if args.trigger.startswith("processingTime")
-            else "5 seconds",
             flush_interval=args.flush_interval,
         )
         q.awaitTermination()
@@ -87,7 +103,8 @@ def main(argv: list[str] | None = None) -> int:
 
     res = pipeline.run(
         spark, args.input_dir, out_dir=args.out_dir,
-        parse_mode=args.parse_mode, with_histograms=args.with_histograms,
+        parse_mode=args.parse_mode or "native",
+        with_histograms=args.with_histograms,
     )
     print(json.dumps(res, default=str))
     return 0

@@ -8,8 +8,8 @@ Reference mapping:
     source offsets ARE the fingerprint+offset store, exactly-once per
     file instead of per byte-range.
   * batching emitter 100 entries / 100 ms (helper/emitter.go:39-40)
-    -> micro-batch trigger (`processingTime` in production,
-    `availableNow` in tests/backfills).
+    -> micro-batch trigger (`processingTime` every `flush_interval`
+    seconds in production, `availableNow` in tests/backfills).
   * per-sink exporters -> foreachBatch writing one partitionBy("sink")
     parquet job per micro-batch, plus per-sink running counts.
   * obsreport accepted/sent counters -> per-batch metrics rows appended
@@ -77,8 +77,6 @@ def run_to_sinks(
     out_dir: str,
     checkpoint_dir: str,
     *,
-    available_now: bool = True,
-    processing_time: str = "5 seconds",
     flush_interval: float | None = None,
 ):
     """Start the streaming job writing per-sink parquet + per-batch
@@ -88,11 +86,9 @@ def run_to_sinks(
     ``flush_interval`` is the fileexporter's flush_interval config
     (exporter/fileexporter/config.go:49-52, seconds): data becomes
     visible in the sink at most that often. In the micro-batch model the
-    processingTime trigger IS the flush clock, so the knob maps onto it
-    directly (and turns availableNow off)."""
-    if flush_interval is not None:
-        available_now = False
-        processing_time = f"{flush_interval} seconds"
+    processingTime trigger IS the flush clock, so a number maps onto a
+    processingTime trigger of that many seconds. ``None`` (the default)
+    is an availableNow trigger: process every file present, then stop."""
     tagged, sink_map = build_stream(
         spark, read_transcript_stream(spark, input_dir), sf_dir
     )
@@ -120,10 +116,10 @@ def run_to_sinks(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
+    if flush_interval is None:
         writer = writer.trigger(availableNow=True)
     else:
-        writer = writer.trigger(processingTime=processing_time)
+        writer = writer.trigger(processingTime=f"{flush_interval} seconds")
     return writer.start()
 
 

@@ -671,6 +671,36 @@ def test_spark_submit_py_files_entrypoint(tmp_path):
     }
 
 
+def test_cli_rejects_misplaced_flags_before_spark_starts(sf_dir, tmp_path, monkeypatch):
+    """A stream-only flag in batch mode, a batch-only flag in streaming
+    mode and --streaming without --checkpoint-dir all exit with status 2
+    before any SparkSession is built and before anything is written."""
+    from pyspark.sql import SparkSession
+
+    from opentelemetry_collector_contrib_spark import cli
+
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    batch = ["--input-dir", sf_dir, "--out-dir", out]
+    cases = [
+        batch + ["--checkpoint-dir", ck],
+        batch + ["--dims-dir", sf_dir],
+        batch + ["--flush-interval", "1"],
+        batch + ["--streaming"],
+        batch + ["--streaming", "--checkpoint-dir", ck, "--parse-mode", "arrow"],
+        batch + ["--streaming", "--checkpoint-dir", ck, "--with-histograms"],
+    ]
+
+    def no_session(*_a, **_k):
+        raise AssertionError("SparkSession built before the flags were checked")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_session)
+    for argv in cases:
+        with pytest.raises(SystemExit) as exc:
+            cli.main(argv)
+        assert exc.value.code == 2, argv
+    assert not os.path.exists(out) and not os.path.exists(ck)
+
+
 def test_write_routed_max_megabytes_and_backups(spark, turns, tmp_path):
     """rotation.max_megabytes translates a byte cap into a records-per-
     file bound via per-sink row sizes; rotation.max_backups rotates the

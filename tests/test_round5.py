@@ -1,5 +1,5 @@
-"""Round-5 tests: the ADVICE defect fixes, the new Gopher gates and the
-uap-core bot/webview/TV UserAgent blocks.
+"""Round-5 tests: the ADVICE defect fixes and the uap-core
+bot/webview/TV UserAgent blocks.
 
 ADVICE defects pinned here:
   1. filter_drop(drop_ratio) hashed map-typed columns with xxhash64 →
@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.operators import (
@@ -28,7 +27,6 @@ from opentelemetry_collector_contrib_spark.operators import (
 from opentelemetry_collector_contrib_spark.operators.useragent import (
     user_agent_map,
 )
-from opentelemetry_collector_contrib_spark.functions import text as tx
 
 
 # --- 1. filter_drop with map columns -------------------------------------
@@ -100,51 +98,6 @@ def test_ottl_time_minus_submicro_duration_floors(spark):
         df, ['set(ts, ts + Duration("1500ns"))']
     ).collect()[0]
     assert out2["ts"] == datetime.datetime(2026, 1, 1, 0, 0, 0, 1)
-
-
-# --- Gopher gates --------------------------------------------------------
-
-
-def test_gopher_gates_hand_computed(spark):
-    good = "the quick brown fox jumps over the lazy dog " * 5  # 45 words
-    symbolic = "# " * 30 + "the end"  # 32 words, 30 '#' -> ratio ~0.9
-    bullets = "\n".join("- item %d" % i for i in range(10))  # all bullet
-    ellipses = "\n".join("to be continued..." for _ in range(10))
-    numbers = "1 2 3 4 5 6 7 8 9 10 " * 5  # 50 words, zero alpha words
-    short = "too short"
-    df = spark.createDataFrame(
-        [
-            (1, good), (2, symbolic), (3, bullets),
-            (4, ellipses), (5, numbers), (6, short),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {
-        r["doc_id"]: r
-        for r in tx.gopher_gates(df, min_words=20).collect()
-    }
-    assert out[1]["gopher_ok"]
-    assert out[1]["n_words"] == 45
-    assert out[1]["alpha_word_frac"] == 1.0
-    assert out[1]["bullet_line_frac"] == 0.0
-
-    # '#' is not an alnum token: 30 symbols over 2 words ("the end")
-    assert not out[2]["gopher_ok"]
-    assert out[2]["symbol_word_ratio"] == pytest.approx(30 / 2)
-
-    assert not out[3]["gopher_ok"]  # 100% bullet lines > 90%
-    assert out[3]["bullet_line_frac"] == 1.0
-
-    assert not out[4]["gopher_ok"]  # 100% ellipsis lines > 30%
-    assert out[4]["ellipsis_line_frac"] == 1.0
-    # '...' also counts toward the symbol ratio
-    assert out[4]["symbol_word_ratio"] > 0.1
-
-    assert not out[5]["gopher_ok"]  # alpha-word fraction 0 < 0.8
-    assert out[5]["alpha_word_frac"] == 0.0
-
-    assert not out[6]["gopher_ok"]  # 2 words < min_words
-    assert out[6]["n_words"] == 2
 
 
 # --- UserAgent bot/webview/TV blocks -------------------------------------
