@@ -97,14 +97,18 @@ def route_logs(
     ⇒ the whole conversation matches") have two physical strategies:
 
       * ``broadcast`` (default): aggregate the DISTINCT matching conv ids
-        (a pruned-column scan + map-side-combined distinct) and broadcast
-        them back as a semi-join flag. The fact table is never shuffled —
-        at 100 TB an extra 2-column scan with the predicate pushed down
-        is far cheaper than exchanging every routed column. Matches the
-        k8sattributes informer-cache shape.
-      * ``window``: ``max(cond) OVER (PARTITION BY conv)`` — one full
-        shuffle of the fact table; correct fallback when the matching
-        conv set itself could be too large to broadcast.
+        (a second pass over ``df``'s lineage + map-side-combined
+        distinct) and broadcast them back as a semi-join flag. For an
+        input not partitioned by conversation this avoids exchanging
+        every routed column. Matches the k8sattributes informer-cache
+        shape.
+      * ``window``: ``max(cond) OVER (PARTITION BY conv)``. A full
+        shuffle of ``df`` unless it is already hash-partitioned by
+        ``conv_col``, in which case it adds no exchange and no second
+        pass. The flagship (plans.pipeline.build) uses it: its source
+        numbers the turns in a window partitioned by conv_id. Also the
+        fallback when the matching conv set could be too large to
+        broadcast.
     """
     conds: list[tuple[Column, str]] = []
     sink_map: dict[str, list[str]] = {}

@@ -78,8 +78,9 @@ def regex_parse(
     prefix: str = "",
 ) -> DataFrame:
     """Vectorized JVM-side regex parse: one ``rlike`` gate + one
-    ``regexp_extract`` per named group. Catalyst CSEs the shared regex
-    evaluation; the whole stage stays inside WholeStageCodegen."""
+    ``regexp_extract`` per named group. The regex match is not shared:
+    the generated code runs one ``Matcher.find`` for the gate and one
+    per group. The whole stage stays inside WholeStageCodegen."""
     src = F.col(parse_from)
     # null input is a parse FAILURE (false, not null): error-channel
     # routing filters on parse_ok and must see every row exactly once

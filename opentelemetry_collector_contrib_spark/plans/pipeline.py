@@ -12,9 +12,11 @@ does (SURVEY.md north rule):
     -> per-sink exporters + count/sum connectors
 
 Scale design (the same plan on local[N] or a cluster):
-  * The fact table is never shuffled before routing: parse/enrich/tag are
-    all narrow (dims broadcast).  `.explain` shows one WholeStageCodegen
-    span from scan to tag when using the native parse path.
+  * The fact table is shuffled once: the source numbers the turns in a
+    window hash-partitioned by conv_id, and the resource-context route
+    (``max(cond) OVER (PARTITION BY conv_id)``) reuses that exchange.
+    Parse and enrich are narrow (dims broadcast), so `.explain` shows one
+    exchange, one scan of events and one of customer below the write.
   * Order-sensitive stages (recombine, per-turn equality) sort an array
     per group instead of trusting shuffle order — correct on any cluster.
   * Aggregations are map-side partial; per-sink writes use one
@@ -106,8 +108,12 @@ def build(
     enriched = lin.observe(enriched, "enrich")
 
     # ---- route stage (routing connector) ----
+    # the resource-context window reuses the source's conv_id exchange
     tagged, sink_map = connectors.route_logs(
-        enriched, default_routes(), default_sinks=["catchall"]
+        enriched,
+        default_routes(),
+        default_sinks=["catchall"],
+        resource_strategy="window",
     )
     tagged = lin.observe(tagged, "route")
 

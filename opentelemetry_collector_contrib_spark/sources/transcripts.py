@@ -26,13 +26,16 @@ from pyspark.sql import DataFrame, SparkSession
 # ---------------------------------------------------------------------------
 # transcripts: one row per turn. turn_idx is dense 0..n-1 per conv_id,
 # ordered by event_id (unique => total order, deterministic in both engines).
+# The window partitions by conv_id itself (computed in the subquery), not
+# by user_id: Spark then hash-partitions the turns by conv_id once, and the
+# pipeline's resource-context window reuses that exchange.
 # ``{events}`` is a placeholder: Spark binds it to the parquet DataFrame,
 # DuckDB to its plain ``events`` table (see oracle_ctes).
 # ---------------------------------------------------------------------------
 TRANSCRIPTS_SQL = """
 SELECT
-  'conv-' || lpad(cast(user_id AS string), 8, '0') AS conv_id,
-  cast(row_number() OVER (PARTITION BY user_id ORDER BY event_id) - 1 AS int)
+  conv_id,
+  cast(row_number() OVER (PARTITION BY conv_id ORDER BY event_id) - 1 AS int)
     AS turn_idx,
   CASE cast(event_id % 4 AS int)
     WHEN 0 THEN 'user' WHEN 1 THEN 'assistant'
@@ -58,8 +61,18 @@ SELECT
     WHEN 0 THEN 'bash' WHEN 1 THEN 'search'
     WHEN 2 THEN 'browser' WHEN 3 THEN 'editor' ELSE '' END AS tool,
   ts
-FROM {events}
+FROM (
+  SELECT *, 'conv-' || lpad(cast(user_id AS string), 8, '0') AS conv_id
+  FROM {events}
+) AS e
 """
+
+#: the ``events`` parquet is read with this schema, so that building
+#: a source runs no schema-inference job
+EVENTS_SCHEMA = (
+    "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+    "value double, props string"
+)
 
 # ---------------------------------------------------------------------------
 # conv_dim: k8sattributes-style resource enrichment keyed on conv_id
@@ -78,6 +91,10 @@ FROM {customer}
 WHERE c_custkey % 10 <> 0
 """
 
+#: the only ``customer`` columns CONV_DIM_SQL reads: the read is pruned to
+#: them and needs no schema-inference job
+CUSTOMER_SCHEMA = "c_custkey bigint, c_nationkey int"
+
 # tool_dim: keyed on tool. '' (no tool) is deliberately absent — the count
 # connector's missing-attr exclusion (connector/countconnector/counter.go:71-73)
 # is exercised through it.
@@ -92,10 +109,17 @@ SELECT * FROM (VALUES
 
 
 def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Turns derived from ``events`` by TRANSCRIPTS_SQL.
+
+    ``events`` is read with EVENTS_SCHEMA. Its ``ts`` is a parquet
+    timestamp without UTC adjustment (pyarrow's ``timestamp("us")``),
+    which Spark reads as ``timestamp_ntz``. A UTC-adjusted ``ts`` is
+    read as ``timestamp_ntz`` too, without error: its UTC wall-clock
+    time."""
     # a DataFrame argument binds under a uuid-named view that spark.sql
     # drops after analysis, so building a source leaves the session's
     # temp views as they were
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = spark.read.schema(EVENTS_SCHEMA).parquet(f"{sf_dir}/events.parquet")
     return spark.sql(TRANSCRIPTS_SQL, events=events)
 
 
@@ -112,7 +136,9 @@ def with_file_attrs(df: DataFrame) -> DataFrame:
 
 
 def conv_dim_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = spark.read.schema(CUSTOMER_SCHEMA).parquet(
+        f"{sf_dir}/customer.parquet"
+    )
     return spark.sql(CONV_DIM_SQL, customer=customer)
 
 

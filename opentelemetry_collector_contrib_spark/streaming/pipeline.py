@@ -5,8 +5,11 @@ Reference mapping:
   * filelog receiver tailing + fingerprint/offset checkpoints
     (pkg/stanza/fileconsumer/file.go; internal/checkpoint/checkpoint.go)
     -> `readStream` file source + the streaming checkpoint log: Spark's
-    source offsets ARE the fingerprint+offset store, exactly-once per
-    file instead of per byte-range.
+    source offsets ARE the fingerprint+offset store, per file instead of
+    per byte-range. The sinks are at-least-once, not exactly-once: a
+    restart after the foreachBatch writes but before the batch's commit
+    replays the batch, and its append writes the rows a second time
+    (deleting ``commits/0`` and restarting doubles ``routed``).
   * batching emitter 100 entries / 100 ms (helper/emitter.go:39-40)
     -> micro-batch trigger (`processingTime` every `flush_interval`
     seconds in production, `availableNow` in tests/backfills).
@@ -81,7 +84,9 @@ def run_to_sinks(
 ):
     """Start the streaming job writing per-sink parquet + per-batch
     metrics. foreachBatch gives the per-micro-batch hook the exporters
-    need (one atomic partitionBy write per batch; append mode).
+    need (one partitionBy write per batch; append mode). Delivery is
+    at-least-once: a batch replayed after a crash before its commit is
+    appended again.
 
     ``flush_interval`` is the fileexporter's flush_interval config
     (exporter/fileexporter/config.go:49-52, seconds): data becomes

@@ -3,12 +3,13 @@ oracle-parity gate)."""
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from opentelemetry_collector_contrib_spark.operators import grok, parsers  # noqa: E402
 

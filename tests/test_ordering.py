@@ -3,12 +3,13 @@ salted == unsalted aggregation, bucketed table join without exchange."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from opentelemetry_collector_contrib_spark.plans import ordering  # noqa: E402
 from opentelemetry_collector_contrib_spark.sources import transcripts as src  # noqa: E402

@@ -3,12 +3,13 @@ mirroring the reference's e2e statement tests (pkg/ottl/e2e/e2e_test.go)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from opentelemetry_collector_contrib_spark.operators import ottl  # noqa: E402
 

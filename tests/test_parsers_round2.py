@@ -4,12 +4,13 @@ chained enrich cascade (k8sattributes association depth)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from opentelemetry_collector_contrib_spark.operators import (  # noqa: E402
     parsers,

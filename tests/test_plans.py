@@ -9,7 +9,8 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from opentelemetry_collector_contrib_spark.operators import connectors  # noqa: E402
 from opentelemetry_collector_contrib_spark.plans import (  # noqa: E402
@@ -108,10 +109,36 @@ def test_run_is_one_routed_pass(spark, sf_dir, tmp_path):
             recompiled = compiles.getCount() - before
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    # 12 measured at sf0.001 (local[8], AQE); chaining per_sink_counts,
-    # pipeline_metrics and write_routed took 26
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 12
+    # 6 measured at sf0.001 (local[8], AQE); routing the incident context
+    # by a broadcast match set and inferring the input schemas took 12;
+    # chaining per_sink_counts, pipeline_metrics and write_routed took 26
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
     assert recompiled == 0
+
+
+def test_flagship_plan_one_exchange_one_scan_per_input(spark, sf_dir, tmp_path):
+    """The source's conv_id exchange numbers the turns and also serves the
+    incident route's window, so the routed plan has one hash exchange and
+    reads events and customer once each. A broadcast match set for the
+    incident route re-scanned and re-enriched events: 2, 2 and 2."""
+    import shutil
+
+    # a fresh copy of the input, so that a source another test cached
+    # does not stand in for the scan (its plan prints twice)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for table in ("events.parquet", "customer.parquet"):
+        orig = f"{sf_dir}/{table}"
+        if os.path.isdir(orig):
+            shutil.copytree(orig, sf / table, copy_function=shutil.copyfile)
+        else:
+            shutil.copyfile(orig, sf / table)
+    res = pipeline.build(spark, str(sf))
+    routed = connectors.routed_union(res.tagged, res.sink_map)
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("ReadSchema: struct<event_id:") == 1, plan
+    assert plan.count("ReadSchema: struct<c_custkey:") == 1, plan
 
 
 def test_json_sink_write_readable(spark, sf_dir, tmp_path):
@@ -287,6 +314,62 @@ def test_scan_pruning_and_filter_pushdown(spark, sf_dir):
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan and "LessThan(event_id,100)" in plan, plan
     assert "ReadSchema: struct<event_id:bigint,user_id:bigint>" in plan, plan
+
+
+def test_source_schemas_match_inferred_types(spark, sf_dir, tmp_path):
+    """EVENTS_SCHEMA and CUSTOMER_SCHEMA give each column they name the
+    type Spark infers, both for the test data and for files of the shape
+    perfbench/gen.py writes with pyarrow (``ts`` as ``timestamp("us")``).
+    A UTC-adjusted ``ts`` reads under EVENTS_SCHEMA as its UTC wall-clock
+    time."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)
+
+    def write(name, ts_type):
+        path = str(tmp_path / name)
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([1], pa.int64()),
+                    "ts": pa.array([ts], ts_type),
+                    "user_id": pa.array([7], pa.int64()),
+                    "event_type": pa.array(["click"], pa.string()),
+                    "value": pa.array([1.5], pa.float64()),
+                    "props": pa.array(['{"k": 1}'], pa.string()),
+                }
+            ),
+            path,
+        )
+        return path
+
+    gen_events = write("events.parquet", pa.timestamp("us"))
+    gen_customer = str(tmp_path / "customer.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "c_custkey": pa.array([7], pa.int64()),
+                "c_name": pa.array(["Customer#000000007"], pa.string()),
+                "c_nationkey": pa.array([3], pa.int32()),
+            }
+        ),
+        gen_customer,
+    )
+    for path, ddl in [
+        (f"{sf_dir}/events.parquet", src.EVENTS_SCHEMA),
+        (f"{sf_dir}/customer.parquet", src.CUSTOMER_SCHEMA),
+        (gen_events, src.EVENTS_SCHEMA),
+        (gen_customer, src.CUSTOMER_SCHEMA),
+    ]:
+        declared = spark.read.schema(ddl).parquet(path).schema
+        declared = [(f.name, f.dataType) for f in declared]
+        inferred = {f.name: f.dataType for f in spark.read.parquet(path).schema}
+        assert declared == [(n, inferred[n]) for n, _ in declared], path
+    utc = write("events_utc.parquet", pa.timestamp("us", tz="UTC"))
+    assert spark.read.schema(src.EVENTS_SCHEMA).parquet(utc).first()["ts"] == ts
 
 
 def test_parse_pipeline_single_codegen_span(spark, sf_dir):
@@ -643,21 +726,20 @@ def test_spark_submit_py_files_entrypoint(tmp_path):
     if not os.path.exists(submit):
         pytest.skip("spark-submit not on PATH")
     pkg_zip = str(tmp_path / "pkg.zip")
-    root = "/root/repo"
     with zipfile.ZipFile(pkg_zip, "w") as z:
         for dirpath, _dirs, files in os.walk(
-            os.path.join(root, "opentelemetry_collector_contrib_spark")
+            os.path.join(ROOT, "opentelemetry_collector_contrib_spark")
         ):
             if "__pycache__" in dirpath:
                 continue
             for f in files:
                 full = os.path.join(dirpath, f)
-                z.write(full, os.path.relpath(full, root))
+                z.write(full, os.path.relpath(full, ROOT))
     proc = subprocess.run(
         [
             submit, "--master", "local[4]", "--py-files", pkg_zip,
             "--conf", "spark.ui.enabled=false",
-            os.path.join(root, "opentelemetry_collector_contrib_spark/cli.py"),
+            os.path.join(ROOT, "opentelemetry_collector_contrib_spark/cli.py"),
             "--input-dir", "/root/testdata/sf0.001",
             "--out-dir", str(tmp_path / "out"),
         ],

@@ -5,11 +5,12 @@ the example-based suites don't."""
 from __future__ import annotations
 
 import re
+import os
 import sys
 
 from hypothesis import given, settings, strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from opentelemetry_collector_contrib_spark.operators import grok, ottl  # noqa: E402
 
