@@ -676,25 +676,3 @@ def sum_connector_multi(
     """sumconnector full config shape (config.go:33-44): N named sum
     metrics over their source_attribute, one pass."""
     return _multi_metric(df, metrics, kind="sum")
-
-
-def stdout_export(df: DataFrame, *, limit: int | None = 100) -> int:
-    """stanza stdout output / debugexporter: records as JSON lines on the
-    driver's stdout. A console is a driver resource, so this collects —
-    the default ``limit=100`` keeps an accidental call on a large
-    DataFrame from OOMing the driver; pass ``limit=None`` EXPLICITLY to
-    dump everything (the reference's debugexporter likewise samples via
-    verbosity). It is a debug tool, not a data path. Returns the number
-    of rows printed."""
-    rows = (df.limit(limit) if limit is not None else df).toJSON().collect()
-    for r in rows:
-        print(r)
-    return len(rows)
-
-
-def drop_export(df: DataFrame) -> None:
-    """drop output: fully consume and discard the stream (noop-format
-    write — the plan still executes, matching the reference's consumed-
-    but-unexported semantics, useful for benchmarks and side-effect-only
-    pipelines)."""
-    df.write.mode("overwrite").format("noop").save()

@@ -231,72 +231,6 @@ def csv_parse(
     return out.select(*df.columns, "parse_ok", *fields)
 
 
-def csv_parse_dynamic(
-    df: DataFrame,
-    *,
-    header_from: str,
-    parse_from: str = "text",
-    delimiter: str = ",",
-    header_delimiter: str | None = None,
-    ignore_quotes: bool = False,
-    out: str = "csv",
-) -> DataFrame:
-    """csv_parser with ``header_attribute`` (operator/parser/csv/
-    parser.go:41-55): the column list comes from a PER-RECORD attribute
-    (e.g. the filelog header feature attaches each file's first line),
-    so every record may carry a different schema. With no static schema
-    for ``from_csv``, the result is a map column ``out`` — exactly the
-    reference's shape (MapCSVHeaders → attributes map).
-
-    All JVM: the header splits on ``header_delimiter`` (defaults to the
-    field delimiter, config.go:44-49); values tokenize with an RFC-4180
-    quote-aware regex (quoted fields keep embedded delimiters, doubled
-    quotes unescape) unless ``ignore_quotes`` selects the bare-split
-    fast path (generateSplitParseFunc). Field-count mismatch or a
-    missing header ⇒ ``parse_ok`` false with a null map (the on_error
-    channel), matching Go's csv.Reader ErrFieldCount."""
-    hd = header_delimiter or delimiter
-    headers = F.split(F.col(header_from), re.escape(hd), -1)
-    if ignore_quotes:
-        vals = F.split(F.col(parse_from), re.escape(delimiter), -1)
-    else:
-        d = re.escape(delimiter)
-        tok = f'(?:^|{d})("(?:[^"]|"")*"|[^{d}]*)'
-        raw = F.regexp_extract_all(F.col(parse_from), F.lit(tok), 1)
-
-        def _unquote(v):
-            quoted = v.rlike('^"(.|\n)*"$') & (F.length(v) >= 2)
-            inner = v.substr(F.lit(2), F.length(v) - 2)
-            return F.when(quoted, F.replace(inner, F.lit('""'), F.lit('"'))).otherwise(v)
-
-        vals = F.transform(raw, _unquote)
-    parse_ok = (
-        F.col(header_from).isNotNull()
-        & F.col(parse_from).isNotNull()
-        & (F.size(headers) == F.size(vals))
-    )
-    # Duplicate header names: the reference's MapCSVHeaders assigns into
-    # a Go map in order, so the LAST value silently wins per record.
-    # map_from_arrays under Spark's default mapKeyDedupPolicy=EXCEPTION
-    # would instead fail the whole job on one bad record — so drop every
-    # entry that has a later occurrence of the same key (an O(w²)
-    # expression over w = column count, trivial per record) and build
-    # the map from the deduplicated entries.
-    entries = F.zip_with(
-        headers, vals, lambda k, v: F.struct(k.alias("key"), v.alias("value"))
-    )
-    deduped = F.filter(
-        entries,
-        lambda x, i: F.array_position(
-            F.slice(headers, i + F.lit(2), F.size(headers)), x["key"]
-        )
-        == 0,
-    )
-    return df.withColumn("parse_ok", parse_ok).withColumn(
-        out, F.when(parse_ok, F.map_from_entries(deduped))
-    )
-
-
 def key_value_parse(
     df: DataFrame,
     *,

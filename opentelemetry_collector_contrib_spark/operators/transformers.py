@@ -110,7 +110,7 @@ def filter_drop(
     under retries; identical rows share one draw, which for log streams
     (timestamped, keyed) is statistically immaterial and documented.
 
-    Map-typed columns (csv header_attribute output, attribute maps)
+    Map-typed columns (attribute maps, ``key_value_parse`` output)
     are not hashable by Spark's xxhash64 (AnalysisException under the
     default spark.sql.legacy.allowHashOnMapType=false), so any column
     whose type contains a MapType is hashed via its canonical

@@ -27,8 +27,7 @@ routes — the reference's routing connector is likewise per-record when
 run in `log` context (connector/routingconnector/logs.go:86-100).
 
 No event-time watermark is used, mirroring the reference's
-processing-time-only semantics (SURVEY.md §2.8); `log_dedup_stream`
-below shows the watermarked variant Spark adds for free.
+processing-time-only semantics (SURVEY.md §2.8).
 """
 
 from __future__ import annotations
@@ -40,7 +39,7 @@ from ..plans.pipeline import default_routes
 from ..schema import PARSE_PATTERN, PARSE_GROUPS, TRANSCRIPT_SCHEMA
 from ..sources import transcripts as src
 
-__all__ = ["read_transcript_stream", "build_stream", "run_to_sinks", "log_dedup_stream"]
+__all__ = ["read_transcript_stream", "build_stream", "run_to_sinks"]
 
 
 def read_transcript_stream(
@@ -126,25 +125,3 @@ def run_to_sinks(
     else:
         writer = writer.trigger(processingTime=f"{flush_interval} seconds")
     return writer.start()
-
-
-def log_dedup_stream(
-    stream: DataFrame,
-    key_cols: list[str],
-    *,
-    ts_col: str = "ts",
-    interval: str = "10 seconds",
-    watermark: str = "30 seconds",
-) -> DataFrame:
-    """Streaming logdedup (processor/logdedupprocessor/processor.go:85-133):
-    the flush `interval` becomes a tumbling event-time window; Spark's
-    watermark adds the late-data bound the reference lacks."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, interval).alias("flush_window"), *key_cols)
-        .agg(
-            F.count(F.lit(1)).alias("log_count"),
-            F.min(ts_col).alias("first_observed_ts"),
-            F.max(ts_col).alias("last_observed_ts"),
-        )
-    )

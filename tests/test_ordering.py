@@ -17,7 +17,11 @@ from opentelemetry_collector_contrib_spark.sources import transcripts as src  # 
 
 @pytest.fixture(scope="module")
 def turns(spark, sf_dir):
-    return src.transcripts_df(spark, sf_dir).cache()
+    # released at teardown: Spark's cache manager would otherwise swap the
+    # cached source into every later build over the same input
+    df = src.transcripts_df(spark, sf_dir).cache()
+    yield df
+    df.unpersist()
 
 
 def test_digest_invariant_to_partitioning_and_order(turns):

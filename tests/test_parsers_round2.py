@@ -260,43 +260,6 @@ def test_regex_parse_keeps_unicode_text(spark):
     assert not by_id[3]["parse_ok"]
 
 
-# ---------------------------------------------------------------------------
-# filelog-style text source + multiline split (fileconsumer/config.go:84)
-# ---------------------------------------------------------------------------
-
-def test_read_text_logs_with_multiline_split(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.sources import textlogs
-
-    log1 = tmp_path / "app1.log"
-    log1.write_text(
-        "2024-01-01 INFO start\n"
-        "2024-01-01 ERROR boom\n"
-        "  at com.example.Foo(Foo.java:1)\n"
-        "  at com.example.Bar(Bar.java:2)\n"
-        "2024-01-01 INFO recovered\n"
-    )
-    log2 = tmp_path / "app2.log"
-    log2.write_text("2024-02-02 WARN solo\n")
-
-    flat = textlogs.read_text_logs(spark, str(tmp_path / "*.log"))
-    assert flat.count() == 6
-    assert set(r["log_file_name"] for r in flat.collect()) == {
-        "app1.log", "app2.log"
-    }
-
-    merged = textlogs.read_text_logs(
-        spark, str(tmp_path / "*.log"), multiline_start=r"^\d{4}-\d{2}-\d{2} "
-    )
-    rows = sorted(
-        (r["log_file_name"], r["text"], r["n_combined"])
-        for r in merged.collect()
-    )
-    assert len(rows) == 4
-    boom = next(r for r in rows if "boom" in r[1])
-    assert boom[2] == 3 and "Bar.java:2" in boom[1]
-    assert ("app2.log", "2024-02-02 WARN solo", 1) in rows
-
-
 def test_csv_empty_unquoted_fields_are_valid(spark):
     d = spark.createDataFrame([("a,,c",), (",b,c",), (",,",)], ["text"])
     got = {r["text"]: r.asDict() for r in
@@ -398,88 +361,6 @@ def test_otlp_anyvalue_full_model(spark):
     assert "resource_schema_url" in r2.asDict()
 
 
-def test_read_text_logs_exclude_and_gzip(spark, tmp_path):
-    """filelog include/exclude globs (fileconsumer/config.go:73-92) and
-    transparent read of gzip'd rotated files."""
-    import gzip
-
-    from opentelemetry_collector_contrib_spark.sources import textlogs
-
-    (tmp_path / "app.log").write_text("a1\na2\n")
-    (tmp_path / "app.log.1").write_text("old1\n")
-    with gzip.open(tmp_path / "app.log.2.gz", "wt") as f:
-        f.write("gz1\ngz2\n")
-    out = textlogs.read_text_logs(
-        spark,
-        [str(tmp_path / "app.log*")],
-        exclude=[str(tmp_path / "app.log.1")],
-    )
-    texts = sorted(r["text"] for r in out.collect())
-    assert texts == ["a1", "a2", "gz1", "gz2"]
-    names = {r["log_file_name"] for r in out.collect()}
-    assert names == {"app.log", "app.log.2.gz"}
-
-
-def test_read_text_logs_charset_decode(spark, tmp_path):
-    """charset decode (pkg/stanza/decode/decoder.go): latin-1 bytes must
-    arrive as the right characters, not mojibake."""
-    from opentelemetry_collector_contrib_spark.sources import textlogs
-
-    (tmp_path / "l1.log").write_bytes("caf\xe9 num\xe9ro 1\nline2\n".encode("latin-1"))
-    out = textlogs.read_text_logs(
-        spark, str(tmp_path / "l1.log"), encoding="ISO-8859-1"
-    )
-    texts = sorted(r["text"] for r in out.collect())
-    assert texts == ["café numéro 1", "line2"]
-
-
-def test_read_text_logs_start_at_end_snapshot(spark, tmp_path):
-    """start_at: end analog — a snapshot records per-file offsets; a
-    later read returns only appended lines (fileconsumer start_at +
-    stored-offset resume)."""
-    from opentelemetry_collector_contrib_spark.sources import textlogs
-
-    p = tmp_path / "s.log"
-    p.write_text("old1\nold2\n")
-    snap = textlogs.snapshot_offsets(spark, str(p))
-    assert list(snap.values()) == [2]
-    with p.open("a") as f:
-        f.write("new1\nnew2\nnew3\n")
-    out = textlogs.read_text_logs(
-        spark, str(p), start_at="end", snapshot=snap
-    )
-    assert sorted(r["text"] for r in out.collect()) == ["new1", "new2", "new3"]
-    # a file NOT in the snapshot is read in full (new file since snapshot)
-    q = tmp_path / "t.log"
-    q.write_text("fresh\n")
-    out2 = textlogs.read_text_logs(
-        spark, str(tmp_path / "*.log"), start_at="end", snapshot=snap
-    )
-    assert sorted(r["text"] for r in out2.collect()) == [
-        "fresh", "new1", "new2", "new3"
-    ]
-
-
-def test_read_text_logs_header_metadata(spark, tmp_path):
-    """header line parsed into per-file attributes attached to every
-    record and dropped from the stream (fileconsumer/internal/header/)."""
-    from opentelemetry_collector_contrib_spark.sources import textlogs
-
-    (tmp_path / "h1.log").write_text("#env=prod region=eu\nr1\nr2\n")
-    (tmp_path / "h2.log").write_text("#env=dev region=us\nr3\n")
-    (tmp_path / "h3.log").write_text("no header here\nr4\n")
-    out = textlogs.read_text_logs(
-        spark,
-        str(tmp_path / "h*.log"),
-        header_pattern=r"^#env=(?P<env>\S+) region=(?P<region>\S+)$",
-    )
-    rows = {r["text"]: (r["env"], r["region"]) for r in out.collect()}
-    assert rows["r1"] == ("prod", "eu") and rows["r2"] == ("prod", "eu")
-    assert rows["r3"] == ("dev", "us")
-    # non-matching first line stays a record, attrs null
-    assert rows["no header here"] == (None, None) and rows["r4"] == (None, None)
-
-
 def test_enrich_lookup_key_regex_selection(spark):
     """k8sattributes key_regex extraction (config.go:131+): only dim
     columns matching the regex attach; the rest are pruned before the
@@ -505,39 +386,6 @@ def test_enrich_lookup_key_regex_selection(spark):
     assert r1["p1"]["k8s.pod.labels.app"] == "app-a"
 
 
-def test_expand_paths_glob_not_fnmatch(spark, tmp_path):
-    """Exclude patterns go through the same glob engine as include: *
-    must NOT match across path separators (doublestar semantics)."""
-    from opentelemetry_collector_contrib_spark.sources import textlogs
-
-    (tmp_path / "a").mkdir(); (tmp_path / "a" / "b").mkdir()
-    (tmp_path / "a" / "debug.log").write_text("x\n")
-    (tmp_path / "a" / "b" / "debug.log").write_text("y\n")
-    got = textlogs.expand_paths(
-        [str(tmp_path / "**" / "*.log")],
-        exclude=[str(tmp_path / "*" / "debug.log")],  # one level only
-    )
-    assert got == [str(tmp_path / "a" / "b" / "debug.log")]
-
-
-def test_snapshot_offsets_encoding_alignment(spark, tmp_path):
-    """snapshot_offsets counts through the SAME reader as the charset
-    read path so start_at=end watermarks stay aligned when the CSV-based
-    decoder skips blank lines."""
-    from opentelemetry_collector_contrib_spark.sources import textlogs
-
-    p = tmp_path / "l.log"
-    p.write_bytes("a\n\nb\n".encode("latin-1"))  # blank line in the middle
-    snap = textlogs.snapshot_offsets(spark, str(p), encoding="ISO-8859-1")
-    assert list(snap.values()) == [2]  # blank line not counted
-    with p.open("ab") as f:
-        f.write("caf\xe9\n".encode("latin-1"))
-    out = textlogs.read_text_logs(
-        spark, str(p), encoding="ISO-8859-1", start_at="end", snapshot=snap
-    )
-    assert [r["text"] for r in out.collect()] == ["café"]
-
-
 def test_anyvalue_integral_double_renders_go_style(spark):
     """json.Marshal(2.0) is \"2\" — integral doubles must not carry the
     Spark-cast \".0\"."""
@@ -555,115 +403,6 @@ def test_anyvalue_integral_double_renders_go_style(spark):
     r = parsers.otlp_json_parse(df).collect()[0]
     assert r["body"] == "2"
     assert r["attributes"]["a"] == "[3,1.5]"
-
-
-def test_read_text_logs_utf16(spark, tmp_path):
-    """Multi-byte charsets must decode whole files before line
-    splitting — Hadoop's byte-level record reader would shear UTF-16
-    code units."""
-    from opentelemetry_collector_contrib_spark.sources import textlogs
-
-    p = tmp_path / "u16.log"
-    p.write_bytes("héllo wörld\n\nsecond liñe\n".encode("utf-16"))
-    out = textlogs.read_text_logs(spark, str(p), encoding="UTF-16")
-    assert [r["text"] for r in out.orderBy("log_file_name").collect()] == [
-        "héllo wörld", "", "second liñe"
-    ]
-    # snapshot alignment on the multi-byte path
-    snap = textlogs.snapshot_offsets(spark, str(p), encoding="UTF-16")
-    assert list(snap.values()) == [3]
-    with p.open("ab") as f:
-        f.write("drittë\n".encode("utf-16-le"))  # append, no BOM
-    out2 = textlogs.read_text_logs(
-        spark, str(p), encoding="UTF-16", start_at="end", snapshot=snap
-    )
-    assert [r["text"] for r in out2.collect()] == ["drittë"]
-
-
-def test_charset_whole_file_size_guard(spark, tmp_path):
-    """Multi-byte charsets decode one file per executor row; oversized
-    files must fail loudly with the rationale instead of OOMing."""
-    from opentelemetry_collector_contrib_spark.sources import textlogs
-
-    p = tmp_path / "big.log"
-    p.write_bytes(("x" * 4096 + "\n").encode("utf-16"))
-    spark.conf.set("spark.graft.charset.maxFileBytes", "1024")
-    try:
-        with pytest.raises(ValueError, match="whole-file decode budget"):
-            textlogs.read_text_logs(spark, str(p), encoding="utf-16")
-        # under budget: reads fine
-        spark.conf.set("spark.graft.charset.maxFileBytes", str(1 << 20))
-        out = textlogs.read_text_logs(spark, str(p), encoding="utf-16")
-        assert out.count() == 1
-    finally:
-        spark.conf.unset("spark.graft.charset.maxFileBytes")
-
-
-def test_csv_parse_dynamic_header_attribute(spark):
-    """csv header_attribute: per-record header -> map, quote-aware,
-    count-mismatch and missing header hit the on_error channel."""
-    from opentelemetry_collector_contrib_spark.operators import parsers as ps
-
-    df = spark.createDataFrame(
-        [
-            ("a,b,c", "1,2,3"),                       # plain
-            ("x|y", '"v,1"|w'),                       # per-row schema + quoted delim (| fields)
-            ("k,v", '"say ""hi""",2'),                # doubled-quote unescape
-            ("a,b", "1,2,3"),                         # too many fields
-            (None, "1,2"),                            # missing header
-        ],
-        ["hdr", "line"],
-    )
-    # row 2 uses | as its own field delimiter — parse the | rows apart
-    pipe = ps.csv_parse_dynamic(
-        df.filter(F.col("hdr") == "x|y"), header_from="hdr",
-        parse_from="line", delimiter="|",
-    ).collect()[0]
-    assert pipe["parse_ok"] and pipe["csv"] == {"x": "v,1", "y": "w"}
-
-    rest = {
-        (r["hdr"], r["line"]): r
-        for r in ps.csv_parse_dynamic(
-            df.filter((F.col("hdr").isNull()) | (F.col("hdr") != "x|y")),
-            header_from="hdr", parse_from="line",
-        ).collect()
-    }
-    ok_row = [r for r in rest.values() if r["hdr"] == "a,b,c"][0]
-    assert ok_row["parse_ok"] and ok_row["csv"] == {"a": "1", "b": "2", "c": "3"}
-    quote_row = [r for r in rest.values() if r["hdr"] == "k,v"][0]
-    assert quote_row["parse_ok"] and quote_row["csv"] == {"k": 'say "hi"', "v": "2"}
-    bad = [r for r in rest.values() if r["hdr"] == "a,b"][0]
-    assert not bad["parse_ok"] and bad["csv"] is None
-    nohdr = [r for r in rest.values() if r["hdr"] is None][0]
-    assert not nohdr["parse_ok"] and nohdr["csv"] is None
-
-
-def test_csv_parse_dynamic_matches_static(spark):
-    """With a constant header the dynamic parser agrees with the static
-    csv_parse on every field."""
-    from opentelemetry_collector_contrib_spark.operators import parsers as ps
-
-    rows = [("1,2,3",), ('"a,x",2,',), ("only,two",)]
-    df = spark.createDataFrame(rows, ["line"]).withColumn(
-        "hdr", F.lit("f1,f2,f3")
-    )
-    dyn = {
-        r["line"]: r
-        for r in ps.csv_parse_dynamic(
-            df, header_from="hdr", parse_from="line"
-        ).collect()
-    }
-    stat = {
-        r["line"]: r
-        for r in ps.csv_parse(
-            df, ["f1", "f2", "f3"], parse_from="line"
-        ).collect()
-    }
-    for line, s in stat.items():
-        d = dyn[line]
-        assert d["parse_ok"] == s["parse_ok"], line
-        if s["parse_ok"]:
-            assert d["csv"] == {"f1": s["f1"], "f2": s["f2"], "f3": s["f3"]}
 
 
 def test_time_parse_location(spark):

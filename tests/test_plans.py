@@ -22,7 +22,11 @@ from opentelemetry_collector_contrib_spark.sources import transcripts as src  # 
 
 @pytest.fixture(scope="module")
 def turns(spark, sf_dir):
-    return src.transcripts_df(spark, sf_dir).cache()
+    # released at teardown: Spark's cache manager would otherwise swap the
+    # cached source into every later build over the same input
+    df = src.transcripts_df(spark, sf_dir).cache()
+    yield df
+    df.unpersist()
 
 
 def test_checkpoint_run_stage_skips_completed(spark, turns, tmp_path):
@@ -92,9 +96,25 @@ def test_run_outputs_agree_across_paths(spark, sf_dir, tmp_path):
         assert block(res["metrics"]) == want_metrics, (out_dir, mode)
 
 
+def _input_copy(sf_dir, dest):
+    """A fresh copy of the input tables, so that a source another test
+    cached cannot stand in for the scan of a plan under test."""
+    import shutil
+
+    dest.mkdir()
+    for table in ("events.parquet", "customer.parquet"):
+        orig = f"{sf_dir}/{table}"
+        if os.path.isdir(orig):
+            shutil.copytree(orig, dest / table, copy_function=shutil.copyfile)
+        else:
+            shutil.copyfile(orig, dest / table)
+    return str(dest)
+
+
 def test_run_is_one_routed_pass(spark, sf_dir, tmp_path):
     """A warm run(out_dir, with_histograms=True) is one routed write plus
     one pruned aggregate over its output, and compiles no new classes."""
+    sf = _input_copy(sf_dir, tmp_path / "sf")
     sc = spark.sparkContext
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiles = codegen.METRIC_COMPILATION_TIME()
@@ -104,7 +124,7 @@ def test_run_is_one_routed_pass(spark, sf_dir, tmp_path):
             sc.setJobGroup(group, group)
             before = compiles.getCount()
             pipeline.run(
-                spark, sf_dir, out_dir=str(tmp_path / str(i)), with_histograms=True
+                spark, sf, out_dir=str(tmp_path / str(i)), with_histograms=True
             )
             recompiled = compiles.getCount() - before
     finally:
@@ -121,19 +141,7 @@ def test_flagship_plan_one_exchange_one_scan_per_input(spark, sf_dir, tmp_path):
     incident route's window, so the routed plan has one hash exchange and
     reads events and customer once each. A broadcast match set for the
     incident route re-scanned and re-enriched events: 2, 2 and 2."""
-    import shutil
-
-    # a fresh copy of the input, so that a source another test cached
-    # does not stand in for the scan (its plan prints twice)
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    for table in ("events.parquet", "customer.parquet"):
-        orig = f"{sf_dir}/{table}"
-        if os.path.isdir(orig):
-            shutil.copytree(orig, sf / table, copy_function=shutil.copyfile)
-        else:
-            shutil.copyfile(orig, sf / table)
-    res = pipeline.build(spark, str(sf))
+    res = pipeline.build(spark, _input_copy(sf_dir, tmp_path / "sf"))
     routed = connectors.routed_union(res.tagged, res.sink_map)
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
@@ -542,50 +550,6 @@ def test_sink_catalog_iceberg_branch(spark, turns, tmp_path):
     assert sc.read(tbl).count() == 100
 
 
-def test_fileexporter_proto_roundtrip(spark, turns, tmp_path):
-    """fileexporter format: proto (exporter/fileexporter/config.go:22-52):
-    records encode as OTLP LogsData protobuf wire frames written varint-
-    length-delimited per partition; a wire-level decode must round-trip
-    body, attributes, resource attributes, severity, and timestamp."""
-    from opentelemetry_collector_contrib_spark.operators import proto
-
-    sample = (
-        turns.limit(20)
-        .withColumn("severity_text", F.lit("INFO"))
-        .withColumn("severity_number", F.lit(9))
-    )
-    enc = proto.encode_logs_proto(
-        sample,
-        body_col="text",
-        ts_col="ts",
-        severity_text_col="severity_text",
-        severity_number_col="severity_number",
-        attr_cols=["role", "tool"],
-        resource_attr_cols=["conv_id"],
-        scope_name="transcripts",
-    )
-    out_dir = str(tmp_path / "proto_sink")
-    n_files = proto.write_proto_files(enc.repartition(3), out_dir)
-    assert 1 <= n_files <= 3
-    decoded = proto.decode_logs_proto(out_dir)
-    assert len(decoded) == 20
-    expect = {
-        r["text"]: r for r in sample.select(
-            "text", "role", "tool", "conv_id", "ts"
-        ).collect()
-    }
-    for rec in decoded:
-        src = expect[rec["body"]]
-        assert rec["attrs"]["role"] == src["role"]
-        assert rec["resource"]["conv_id"] == src["conv_id"]
-        assert rec["scope"] == "transcripts"
-        assert rec["severity_text"] == "INFO" and rec["severity_number"] == 9
-        import calendar
-        want_ns = int(calendar.timegm(src["ts"].timetuple())) * 10**9 \
-            + src["ts"].microsecond * 1000
-        assert rec["ts"] == want_ns
-
-
 def test_count_connector_multi_grand_total_metric(spark, turns):
     """A metric with NO attributes is a grand total (the reference
     allows attribute-less metrics) — empty grouping set in the same
@@ -601,30 +565,6 @@ def test_count_connector_multi_grand_total_metric(spark, turns):
     assert rows[("all.turns", None)] == turns.count()
     roles = {ro: v for (m, ro), v in rows.items() if m == "by.role"}
     assert sum(roles.values()) == turns.count() and len(roles) == 4
-
-
-def test_proto_null_ts_and_null_resource_attr(spark, tmp_path):
-    """Code-review regressions: a null timestamp omits the field instead
-    of crashing the task; a null resource attribute is absent on the
-    wire, not the string \"None\"; rewriting a sink dir clears stale
-    frames."""
-    from opentelemetry_collector_contrib_spark.operators import proto
-
-    d = spark.createDataFrame(
-        [("b1", None, "c1"), ("b2", "2024-01-01 00:00:00", None)],
-        "text string, raw string, conv_id string",
-    ).select("text", F.to_timestamp("raw").alias("ts"), "conv_id")
-    enc = proto.encode_logs_proto(
-        d, body_col="text", ts_col="ts", resource_attr_cols=["conv_id"]
-    )
-    out_dir = str(tmp_path / "p")
-    proto.write_proto_files(enc, out_dir)
-    recs = {r["body"]: r for r in proto.decode_logs_proto(out_dir)}
-    assert "ts" not in recs["b1"] and recs["b1"]["resource"] == {"conv_id": "c1"}
-    assert recs["b2"]["ts"] > 0 and recs["b2"]["resource"] == {}
-    # overwrite semantics: second write with one row leaves one frame
-    proto.write_proto_files(enc.limit(1).repartition(1), out_dir)
-    assert len(proto.decode_logs_proto(out_dir)) == 1
 
 
 def test_count_connector_multi_randomized_vs_single(spark):
@@ -701,16 +641,6 @@ def test_pipeline_metrics_single_pass_block(spark, sf_dir):
     assert {m["tool"] for m in tools} >= {"bash", "none"}
     roles = [m for m in res["metrics"] if m["metric"] == "turns.per_sink_role"]
     assert sum(m["value"] for m in roles) == sum(res["per_sink_counts"].values())
-
-
-def test_stdout_and_drop_exports(spark, turns, capsys):
-    import json
-
-    n = connectors.stdout_export(turns.select("conv_id", "turn_idx"), limit=3)
-    out = capsys.readouterr().out.strip().splitlines()
-    assert n == 3 and len(out) == 3
-    assert {"conv_id", "turn_idx"} <= set(json.loads(out[0]))
-    connectors.drop_export(turns.limit(10))  # executes, no output
 
 
 def test_spark_submit_py_files_entrypoint(tmp_path):

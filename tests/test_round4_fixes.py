@@ -5,8 +5,6 @@ Each test pins one reported failure mode:
      same attrs in different order (connectors.py membership dedupe)
   2. OTTL time/duration math (LANGUAGE.md L198-218) — timestamp
      subtraction and time ± Duration must compile, * and / must not
-  3. proto encoder omitting pandas NaN/NaT attribute values
-  4. filelog header_pattern mixing unnamed and named capture groups
 """
 
 from __future__ import annotations
@@ -107,56 +105,6 @@ def test_ottl_time_multiply_rejected(spark):
     # time + time is not in the rules table either
     with pytest.raises(ValueError, match="time/duration"):
         ottl.apply_statements(df, ["set(x, a + b)"])
-
-
-def test_proto_nan_attrs_omitted(spark, tmp_path):
-    """NaN/NaT attribute values from numeric Arrow columns must be
-    omitted from OTLP attributes, not serialized as 'nan'/'NaT'."""
-    from opentelemetry_collector_contrib_spark.operators import proto
-
-    df = spark.createDataFrame(
-        [("ok", 1.5, "x"), ("nully", None, None)],
-        ["text", "score", "tag"],
-    ).withColumn("ts", F.lit(None).cast("timestamp"))
-    enc = proto.encode_logs_proto(
-        df, body_col="text", ts_col=None, attr_cols=["score", "tag"]
-    )
-    out_dir = str(tmp_path / "pb")
-    proto.write_proto_files(enc, out_dir)
-    recs = {r["body"]: r for r in proto.decode_logs_proto(out_dir)}
-    assert recs["ok"]["attrs"].get("score") == "1.5"
-    # the null row carries NO score/tag attributes at all
-    assert "score" not in recs["nully"]["attrs"]
-    assert "tag" not in recs["nully"]["attrs"]
-    for r in recs.values():
-        for v in r["attrs"].values():
-            assert v not in ("nan", "NaT", "None", "<NA>")
-
-
-def test_header_pattern_mixed_unnamed_groups(spark, tmp_path):
-    """A header pattern with an unnamed group before the named ones must
-    still bind each name to its own capture (groupindex, not i+1)."""
-    from opentelemetry_collector_contrib_spark.sources import textlogs
-
-    (tmp_path / "m1.log").write_text("##prod eu\nrec1\n")
-    out = textlogs.read_text_logs(
-        spark,
-        str(tmp_path / "m*.log"),
-        header_pattern=r"^(#+)(?P<env>\w+) (?P<region>\w+)$",
-    )
-    rows = {r["text"]: (r["env"], r["region"]) for r in out.collect()}
-    assert rows["rec1"] == ("prod", "eu")
-
-
-def test_stdout_export_default_cap(spark, capsys):
-    """Default limit=100 so a stray call can't collect a huge frame on
-    the driver; explicit limit=None still dumps everything."""
-    df = spark.range(250).select(F.col("id"))
-    n = connectors.stdout_export(df)
-    assert n == 100
-    n_all = connectors.stdout_export(df, limit=None)
-    assert n_all == 250
-    capsys.readouterr()
 
 
 def test_detect_system_probe(spark):

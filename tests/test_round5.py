@@ -7,8 +7,6 @@ ADVICE defects pinned here:
   2. write_routed max_backups deleted the current write's own files
      (covered in tests/test_plans.py::test_write_routed_max_megabytes_
      and_backups)
-  3. csv_parse_dynamic raised DUPLICATE_MAP_KEY on duplicate headers
-     (reference MapCSVHeaders: last value silently wins)
   4. OTTL time ± duration truncated ns→µs toward zero via a double
      divide (Go does exact integer ns arithmetic; floor semantics)
 """
@@ -19,11 +17,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_contrib_spark.operators import (
-    ottl,
-    parsers,
-    transformers,
-)
+from opentelemetry_collector_contrib_spark.operators import ottl, transformers
 from opentelemetry_collector_contrib_spark.operators.useragent import (
     user_agent_map,
 )
@@ -33,8 +27,8 @@ from opentelemetry_collector_contrib_spark.operators.useragent import (
 
 
 def test_filter_drop_ratio_with_map_column(spark):
-    """A frame carrying a map column (csv_parse_dynamic output,
-    attribute maps) must not fail analysis: map columns hash via their
+    """A frame carrying a map column (attribute maps,
+    key_value_parse output) must not fail analysis: map columns hash via their
     to_json rendering."""
     df = spark.createDataFrame(
         [(i, "sys" if i % 2 else "usr", {"k": str(i)}) for i in range(200)],
@@ -57,25 +51,6 @@ def test_filter_drop_ratio_nested_map_column(spark):
     )
     out = transformers.filter_drop(df, F.col("id") < 25, drop_ratio=0.4)
     assert out.count() >= 25
-
-
-# --- 3. csv_parse_dynamic duplicate headers ------------------------------
-
-
-def test_csv_dynamic_duplicate_headers_last_wins(spark):
-    df = spark.createDataFrame(
-        [("a,b,a", "1,2,3"), ("x,y,z", "7,8,9")], ["hdr", "text"]
-    )
-    rows = {
-        r["hdr"]: r
-        for r in parsers.csv_parse_dynamic(
-            df, header_from="hdr", parse_from="text"
-        ).collect()
-    }
-    assert rows["a,b,a"]["parse_ok"]
-    # Go's MapCSVHeaders assigns in order: the LAST duplicate wins
-    assert rows["a,b,a"]["csv"] == {"a": "3", "b": "2"}
-    assert rows["x,y,z"]["csv"] == {"x": "7", "y": "8", "z": "9"}
 
 
 # --- 4. OTTL time ± duration floor semantics -----------------------------

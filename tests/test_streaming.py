@@ -1,5 +1,5 @@
 """Streaming pipeline tests: batch/stream parity, checkpoint resume,
-stateful recombine."""
+flush-interval trigger, stateless parses under a stream."""
 
 from __future__ import annotations
 
@@ -11,13 +11,9 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from opentelemetry_collector_contrib_spark.operators import transformers  # noqa: E402
 from opentelemetry_collector_contrib_spark.sources import transcripts as src  # noqa: E402
 from opentelemetry_collector_contrib_spark.streaming import (  # noqa: E402
     pipeline as spipe,
-)
-from opentelemetry_collector_contrib_spark.streaming.recombine import (  # noqa: E402
-    recombine_stream,
 )
 
 
@@ -99,88 +95,6 @@ def test_stream_checkpoint_resume_no_duplicates(spark, sf_dir, turns, tmp_path):
     # metrics table recorded both micro-batch rounds
     metrics = spark.read.parquet(f"{out}/metrics")
     assert metrics.select("batch_id").distinct().count() >= 2
-
-
-def test_recombine_stream_matches_batch(spark, sf_dir, turns, tmp_path):
-    inp = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ck")
-    out = str(tmp_path / "out")
-    turns.write.parquet(inp)
-
-    stream = spipe.read_transcript_stream(spark, inp).withColumn(
-        "is_last", F.col("turn_idx") % 5 == 4
-    )
-    q = (
-        recombine_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await(q)
-    got = sorted(
-        (r["conv_id"], r["turn_idx"], r["text"], r["n_combined"])
-        for r in spark.read.parquet(out).collect()
-    )
-
-    batch = transformers.recombine(
-        turns, is_last=(F.col("turn_idx") % 5 == 4), combine_with="\n"
-    )
-    expect = sorted(
-        (r["conv_id"], r["turn_idx"], r["text"], r["n_combined"])
-        for r in batch.select("conv_id", "turn_idx", "text", "n_combined").collect()
-    )
-    # streaming leaves blocks that never saw is_last open (no timeout
-    # under availableNow) — batch emits them; everything flushed must
-    # match exactly, and open-block keys account for the difference
-    got_keys = {(c, t) for c, t, _, _ in got}
-    expect_map = {(c, t): (x, n) for c, t, x, n in expect}
-    assert got_keys <= set(expect_map)
-    for c, t, x, n in got:
-        assert expect_map[(c, t)] == (x, n)
-    # every complete (is_last-terminated) block was emitted by the stream
-    complete = {
-        (c, t)
-        for c, t, x, n in expect
-        if (t + n - 1) % 5 == 4  # block ends on an is_last row
-    }
-    assert complete <= got_keys
-
-
-def test_log_dedup_stream_matches_batch_totals(spark, sf_dir, turns, tmp_path):
-    inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    turns.write.parquet(inp)
-    stream = spipe.read_transcript_stream(spark, inp)
-    dedup = spipe.log_dedup_stream(
-        stream, ["role", "tool"], ts_col="ts", interval="1 hour", watermark="2 hours"
-    )
-    q = (
-        dedup.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await(q)
-    got = spark.read.parquet(out)
-    # append mode emits only windows the watermark has closed: windows
-    # ending within `watermark` of the max event time stay open — the
-    # reference has no watermark at all (SURVEY §2.8), this is the
-    # late-data bound Spark adds. Expected = rows in closed windows.
-    max_ts = turns.agg(F.max("ts")).first()[0]
-    closed = turns.filter(
-        F.window("ts", "1 hour").end <= F.lit(max_ts) - F.expr("INTERVAL 2 HOURS")
-    )
-    assert got.agg(F.sum("log_count")).first()[0] == closed.count()
-    assert closed.count() > 0
-    # each (window, role, tool) appears once
-    assert (
-        got.groupBy("flush_window", "role", "tool").count().filter("count > 1").count()
-        == 0
-    )
 
 
 def test_with_file_attrs(spark, turns, tmp_path):
