@@ -184,144 +184,44 @@ def routed_union(tagged: DataFrame, sink_map: dict[str, list[str]]) -> DataFrame
 
 
 def write_routed(
-    tagged: DataFrame,
-    sink_map: dict[str, list[str]],
-    base_path: str,
-    *,
-    fmt: str = "parquet",
-    files_per_sink: int | None = None,
-    salt_col: str = "conv_id",
-    compression: str | None = None,
-    max_records_per_file: int | None = None,
-    max_megabytes: int | None = None,
-    max_backups: int | None = None,
-    max_days: int | None = None,
+    tagged: DataFrame, sink_map: dict[str, list[str]], base_path: str
 ) -> dict[str, str]:
-    """Exporter stage: one partitioned write fans rows out to per-sink
-    tables (fileexporter group_by semantics,
+    """Exporter stage: one partitioned parquet write fans rows out to
+    per-sink tables (fileexporter group_by semantics,
     exporter/fileexporter/grouping_file_exporter.go:116-152). One write
     action, partitioned by ``sink`` — the shuffle-free analog of N
     filtered writes (AQE still runs it as several jobs: one per
     broadcast and shuffle stage of the input plan, then the write).
 
-    ``files_per_sink`` bounds output file count (the batchperresourceattr
-    re-batching analog, pkg/batchperresourceattr): without it, every
-    write task emits one file per sink it touches (tasks × sinks files at
-    scale). A deterministic salt ``hash(salt_col) % files_per_sink``
-    shuffles each sink's rows into exactly that many partitions — one
-    file each — while avoiding the single-hot-partition skew that a bare
-    ``repartition("sink")`` would create for the catchall sink.
+    The job writes ``{base_path}/routed__staging``. Only after it
+    commits is the new tree swapped in, in three steps: the live
+    ``routed`` tree moves aside to ``routed__old``, staging renames to
+    ``routed``, and ``routed__old`` is deleted. Each step is one checked
+    rename or delete, so a failed job, or a crash at any step, leaves
+    every sink holding either the whole old output or the whole new
+    one; the next call's ``_recover_or_clear_staging`` finishes or
+    discards an interrupted swap. A sink on disk that this run does not
+    write leaves with the old tree.
 
-    The ``rotation`` block (exporter/fileexporter/config.go:58-79) maps
-    as: ``max_megabytes`` → per-file byte cap via records-per-file;
-    ``max_backups`` → N newest complete prior generations retained under
-    ``{base}/routed_backups`` (0 = retain ALL, lumberjack's MaxBackups
-    zero value); ``max_days`` → backup generations older than 24h·N (by
-    filesystem modification time) are deleted, the lumberjack MaxAge
-    analog. ``localtime`` has no analog — backup names are ordinal
-    generations, not timestamps. With rotation on, the new generation
-    is written to a staging dir and swapped in AFTER the job commits,
-    so a failed write never leaves the live sink paths empty."""
-    if max_days is not None and max_days <= 0:
-        # lumberjack's MaxAge=0 means DISABLED (config.go:64-69); pass
-        # None for that here — accepting 0 would silently mean "delete
-        # every backup including the one just rotated", never intended
-        raise ValueError("max_days must be >= 1 (or None to disable)")
-    if max_backups is not None and max_backups < 0:
-        # (rotate-but-keep-zero-backups needs no knob: live-only output
-        # is exactly what plain overwrite — no rotation args — does)
-        raise ValueError("max_backups must be >= 0 (0 = retain all)")
-    routed = routed_union(tagged, sink_map)
-    # cap estimation reads THIS frame, captured before the
-    # files_per_sink repartition below — estimating after it would run
-    # the full wide shuffle once for the estimate and again for the
-    # write
-    est_src = routed
-    if files_per_sink is not None:
-        salt = F.pmod(F.hash(F.col(salt_col)), F.lit(files_per_sink))
-        n_sinks = len({s for v in sink_map.values() for s in v})
-        routed = routed.repartition(
-            files_per_sink * n_sinks, F.col("sink"), salt
-        )
+    ``base_path`` must have a single writer at a time: the staging and
+    old-tree names are fixed, so two concurrent calls on one base path
+    could promote or delete each other's trees."""
+    spark = tagged.sparkSession
     path = f"{base_path.rstrip('/')}/routed"
-    writer = routed.write.mode("overwrite").partitionBy("sink").format(fmt)
-    if compression is not None:
-        # fileexporter compression passthrough (exporter/fileexporter/
-        # config.go:22-52): codec applies per output file
-        writer = writer.option("compression", compression)
-    if max_megabytes is not None and max_records_per_file is None:
-        # rotation.max_megabytes (exporter/fileexporter/config.go:60-62):
-        # lumberjack rotates by file size. Spark's knob is records per
-        # file, so translate: average serialized row size (JSON length —
-        # exact for fmt=json, a conservative overestimate for columnar
-        # parquet) -> records that fit the cap. maxRecordsPerFile is one
-        # GLOBAL writer option, while lumberjack caps each sink's file
-        # independently — so size the cap for the LARGEST-rowed sink
-        # (min records over per-sink averages): no sink's files exceed
-        # the cap, small-rowed sinks just rotate early (lumberjack never
-        # over-sizes either). The per-sink averages come from ONE full
-        # narrow aggregate pass, NOT a limit(N) head sample: limit pulls
-        # from the first partitions only, so a large-rowed sink routed
-        # later would escape the estimate entirely and its files would
-        # blow the cap. The extra pass is a projection + map-side-
-        # combined agg (no wide shuffle of data rows); callers who can't
-        # afford it at extreme scale pass max_records_per_file directly.
-        cols = [c for c in est_src.columns]
-        per_sink = (
-            est_src.groupBy("sink")
-            .agg(F.avg(F.length(F.to_json(F.struct(*cols)))).alias("b"))
-            .collect()
-        )
-        worst = max((r["b"] for r in per_sink if r["b"]), default=None)
-        if worst:
-            max_records_per_file = max(
-                1, int(max_megabytes * (1 << 20) // max(worst, 1.0))
-            )
-    if max_records_per_file is not None:
-        # rotation analog (fileexporter rotation.max_megabytes/backups,
-        # config.go:58-79): bound each output file; Spark rolls to a new
-        # file within the same task once the cap is hit
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
+    staging, old = f"{path}__staging", f"{path}__old"
+    _recover_or_clear_staging(spark, staging, path)
+    writer = routed_union(tagged, sink_map).write.mode("overwrite")
+    writer.partitionBy("sink").parquet(staging)
+    fs, live, _ = _fs(spark, path)
+    if fs.exists(live):
+        # an old tree that recovery kept (live held no sinks) takes live
+        # inside it — Hadoop renames into an existing directory — and the
+        # delete below removes both
+        _fs_rename(spark, path, old)
+    _fs_rename(spark, staging, path)
+    _fs_delete_if_exists(spark, old)
     sinks = sorted({s for v in sink_map.values() for s in v})
-    paths = {s: f"{path}/sink={s}" for s in sinks}
-    if max_backups is not None or max_days is not None:
-        # rotation.max_backups (fileexporter config.go:71-73): lumberjack
-        # keeps the live file plus up to N complete rotated files. The
-        # analog: the new generation is WRITTEN TO A STAGING DIR first;
-        # only after the (potentially minutes-long, failable) Spark job
-        # commits does the live generation rotate: the WHOLE live tree
-        # moves in ONE checked rename to the sibling
-        # {base}/routed_backups/gen-K/ dir (generation-first layout —
-        # every sink on disk travels together, so there is no per-sink
-        # loop that a crash could interrupt half-way), then staging
-        # renames into place. Properties, each matching lumberjack:
-        #   * a failed/interrupted write leaves the live tree UNTOUCHED
-        #     (the vulnerable window is two metadata renames, not the
-        #     whole job, and each is all-or-nothing);
-        #   * a sink present on disk but absent from this run's config
-        #     still rotates to a backup before the old tree goes away;
-        #   * reads of the returned sink paths see ONLY the live
-        #     generation (backups live outside the read path);
-        #   * a retained backup is a COMPLETE generation — all sinks,
-        #     all part-files — a usable rollback point;
-        #   * max_backups=0 retains ALL generations (lumberjack's
-        #     MaxBackups zero value), max_days prunes by age.
-        staging = f"{path}__staging"
-        _recover_or_clear_staging(tagged.sparkSession, staging, path)
-        writer.save(staging)
-        _rotate_generations(tagged.sparkSession, path)
-        _fs_rename(tagged.sparkSession, staging, path)
-        if max_backups is not None and max_backups > 0:
-            _prune_backup_generations(
-                tagged.sparkSession, path, max_backups
-            )
-        if max_days is not None:
-            _prune_backups_older_than(
-                tagged.sparkSession, path, max_days
-            )
-    else:
-        writer.save(path)
-    return paths
+    return {s: f"{path}/sink={s}" for s in sinks}
 
 
 def _fs(spark, path_str: str):
@@ -344,112 +244,32 @@ def _fs_rename(spark, src: str, dst: str) -> None:
 
 
 def _recover_or_clear_staging(spark, staging: str, path: str) -> None:
-    """Handle a staging dir left by a crashed prior run. The one unsafe
-    crash window in the swap protocol is after the live tree's delete
-    and before the staging rename — there the fully-committed new
-    generation exists ONLY in staging (it carries Spark's _SUCCESS
-    marker) while the live path is gone — or holds no sink dirs, the
-    state a crash between the rotation and the live-tree delete leaves.
-    Recover it by promoting staging to live (this run will then rotate
-    it into a backup like any other prior generation). In every other
-    state — staging without _SUCCESS (a failed job's debris) or staging
-    alongside an intact live tree (crash before the swap began; that
-    run's caller already saw the failure) — staging is discarded."""
-    fs, sp, _ = _fs(spark, staging)
-    if not fs.exists(sp):
-        return
-    _, lp, jvm = _fs(spark, path)
-    success = jvm.org.apache.hadoop.fs.Path(f"{staging}/_SUCCESS")
-    live_has_sinks = fs.exists(lp) and any(
-        st.getPath().getName().startswith("sink=")
-        for st in fs.listStatus(lp)
-    )
-    if fs.exists(success) and not live_has_sinks:
-        _fs_delete_if_exists(spark, path)
-        _fs_rename(spark, staging, path)
-    else:
-        _fs_delete_if_exists(spark, staging)
+    """Finish or discard a swap that a crashed prior ``write_routed``
+    left. Staging carrying Spark's _SUCCESS marker while the live path
+    holds no sink dirs is a committed tree whose swap stopped after the
+    live tree moved aside: promote it to live. Any other staging — a
+    failed job's debris, or a committed tree next to an intact live one
+    (a crash before the swap began; that run's caller already saw the
+    failure) — is discarded. A leftover ``{path}__old`` is deleted only
+    once a live tree with sinks is in place, so the old output is never
+    deleted while it is the only output on disk."""
+    fs, lp, jvm = _fs(spark, path)
 
-
-def _backup_generations(spark, path: str):
-    """Return [(gen_index, FileStatus)] for every generation dir under
-    the backup tree, unsorted."""
-    fs, root, _ = _fs(spark, _backup_root(path))
-    if not fs.exists(root):
-        return []
-    return [
-        (int(st.getPath().getName()[4:]), st)
-        for st in fs.listStatus(root)
-        if st.getPath().getName().startswith("gen-")
-    ]
-
-
-def _backup_root(path: str) -> str:
-    return f"{path}_backups"
-
-
-def _rotate_generations(spark, path: str) -> None:
-    """Move the WHOLE live tree (every sink on disk, not just this
-    run's sink set — a sink dropped from the config still deserves its
-    backup) to the next gen-K backup dir in ONE checked rename. A
-    single directory move is all-or-nothing: no crash can leave some
-    sinks rotated and others live, which a per-sink loop could. A live
-    root with no sink dirs (only a _SUCCESS marker — debris from a
-    crash between rotation and swap) is deleted, not enshrined as a
-    generation."""
-    fs, live_root, jvm = _fs(spark, path)
-    if not fs.exists(live_root):
-        return
-    # a generation must carry DATA: a live tree whose sink dirs hold no
-    # part-files (debris from a crashed write, or just the _SUCCESS
-    # marker) is deleted, not enshrined as a backup — it would consume
-    # a max_backups slot and evict a real rollback point
-    has_data = any(
-        st.getPath().getName().startswith("sink=")
-        and any(
-            f.getPath().getName().startswith("part-")
-            for f in fs.listStatus(st.getPath())
+    def live_has_sinks() -> bool:
+        return fs.exists(lp) and any(
+            st.getPath().getName().startswith("sink=")
+            for st in fs.listStatus(lp)
         )
-        for st in fs.listStatus(live_root)
-    )
-    if not has_data:
-        _fs_delete_if_exists(spark, path)
-        return
-    broot = _backup_root(path)
-    fs_b, broot_p, _ = _fs(spark, broot)
-    if not fs_b.exists(broot_p) and not fs_b.mkdirs(broot_p):
-        raise IOError(f"failed to create backup root {broot}")
-    nxt = max((g for g, _ in _backup_generations(spark, path)), default=-1) + 1
-    _fs_rename(spark, path, f"{broot}/gen-{nxt}")
 
-
-def _prune_backups_older_than(spark, path: str, max_days: int) -> None:
-    """rotation.max_days (fileexporter config.go:64-69, lumberjack
-    MaxAge): delete backup generations whose filesystem modification
-    time is older than 24h·``max_days``. A day is exactly 24 hours, as
-    the reference documents."""
-    import time
-
-    cutoff_ms = int((time.time() - max_days * 86400) * 1000)
-    fs, _, _ = _fs(spark, _backup_root(path))
-    for _g, st in _backup_generations(spark, path):
-        if st.getModificationTime() < cutoff_ms:
-            fs.delete(st.getPath(), True)
-
-
-def _prune_backup_generations(spark, path: str, max_backups: int) -> None:
-    """Keep the ``max_backups`` newest COMPLETE backup generations;
-    delete older ones (lumberjack's bounded retention, with a
-    generation — one whole prior write, all sinks — as the rotation
-    unit). Callers pass ``max_backups >= 1``; zero means retain-all
-    upstream (lumberjack's MaxBackups zero value) and never reaches
-    here."""
-    gens = sorted(
-        _backup_generations(spark, path), key=lambda t: t[0], reverse=True
-    )
-    fs, _, _ = _fs(spark, _backup_root(path))
-    for _g, st in gens[max_backups:]:
-        fs.delete(st.getPath(), True)
+    if fs.exists(jvm.org.apache.hadoop.fs.Path(staging)):
+        success = jvm.org.apache.hadoop.fs.Path(f"{staging}/_SUCCESS")
+        if fs.exists(success) and not live_has_sinks():
+            _fs_delete_if_exists(spark, path)
+            _fs_rename(spark, staging, path)
+        else:
+            _fs_delete_if_exists(spark, staging)
+    if live_has_sinks():
+        _fs_delete_if_exists(spark, f"{path}__old")
 
 
 def count_connector(

@@ -167,8 +167,6 @@ def run(
     ``lineage`` holds the stage counters of the routed action."""
     result = build(spark, sf_dir, parse_mode=parse_mode)
     if out_dir:
-        # No files_per_sink: its repartition would put the lineage observes
-        # in a shuffle map stage, where a retried stage counts rows twice.
         paths = connectors.write_routed(result.tagged, result.sink_map, out_dir)
         written = spark.read.schema(METRICS_SCHEMA).parquet(
             f"{out_dir.rstrip('/')}/routed"

@@ -149,19 +149,6 @@ def test_flagship_plan_one_exchange_one_scan_per_input(spark, sf_dir, tmp_path):
     assert plan.count("ReadSchema: struct<c_custkey:") == 1, plan
 
 
-def test_json_sink_write_readable(spark, sf_dir, tmp_path):
-    from opentelemetry_collector_contrib_spark.operators import connectors
-    from opentelemetry_collector_contrib_spark.plans import pipeline
-
-    res = pipeline.build(spark, sf_dir)
-    paths = connectors.write_routed(
-        res.tagged, res.sink_map, str(tmp_path), fmt="json", files_per_sink=2
-    )
-    total = sum(spark.read.json(p).count() for p in paths.values())
-    routed = connectors.routed_union(res.tagged, res.sink_map)
-    assert total == routed.count()
-
-
 def test_build_leaves_session_temp_views_unchanged(spark, sf_dir):
     # building a plan binds its parquet inputs without touching the
     # session's temp views: a user's own "customer" view keeps its rows
@@ -419,26 +406,6 @@ def test_write_stage_lineage_from_stored_files(spark, turns, tmp_path):
     assert sum(r["rows"] for r in rows) == stored.count()
     assert sum(r["errors"] for r in rows) == stored.filter("is_err").count()
     assert cp.stage_done(base, "st")
-
-
-def test_write_routed_rotation_bounds_file_size(spark, turns, tmp_path):
-    """fileexporter rotation analog: maxRecordsPerFile bounds every
-    output file; all rows still land exactly once."""
-    import glob
-
-    tagged = turns.withColumn("_route", F.lit("all"))
-    paths = connectors.write_routed(
-        tagged, {"all": ["only"]}, str(tmp_path),
-        max_records_per_file=100, files_per_sink=2,
-    )
-    files = glob.glob(paths["only"] + "/*.parquet")
-    assert files
-    total = 0
-    for f in files:
-        n = spark.read.parquet(f).count()
-        assert n <= 100, f
-        total += n
-    assert total == turns.count()
 
 
 def test_count_connector_multi_single_scan(spark, turns):
@@ -713,55 +680,6 @@ def test_cli_rejects_misplaced_flags_before_spark_starts(sf_dir, tmp_path, monke
     assert not os.path.exists(out) and not os.path.exists(ck)
 
 
-def test_write_routed_max_megabytes_and_backups(spark, turns, tmp_path):
-    """rotation.max_megabytes translates a byte cap into a records-per-
-    file bound via per-sink row sizes; rotation.max_backups rotates the
-    prior generation WHOLE into a sibling routed_backups tree and keeps
-    the N newest generations (lumberjack's bounded retention — live
-    reads never see backup rows, a backup is a complete rollback
-    point)."""
-    import glob
-    import os
-
-    tagged = turns.withColumn("_route", F.lit("all"))
-    paths = connectors.write_routed(
-        tagged, {"all": ["only"]}, str(tmp_path / "mb"),
-        max_megabytes=1, files_per_sink=2,
-    )
-    files = glob.glob(paths["only"] + "/*.parquet")
-    assert files
-    total = sum(spark.read.parquet(f).count() for f in files)
-    assert total == turns.count()
-    for f in files:
-        # JSON-length estimate is a parquet overestimate -> files must
-        # come in under the byte cap
-        assert os.path.getsize(f) <= 1 << 20
-
-    # four consecutive writes with max_backups=2: the live sink dir
-    # always holds EXACTLY the current generation (a bulk read is never
-    # polluted by backup rows), each retained backup generation is
-    # COMPLETE (full row count), and generations beyond the bound are
-    # deleted oldest-first
-    n = turns.count()
-    for _ in range(4):
-        paths2 = connectors.write_routed(
-            tagged, {"all": ["only"]}, str(tmp_path / "bk"),
-            files_per_sink=4, max_backups=2,
-        )
-        live = glob.glob(paths2["only"] + "/part-*")
-        assert len(live) == 4  # current generation only, never pruned
-        assert spark.read.parquet(paths2["only"]).count() == n
-    gen_dirs = sorted(
-        os.path.basename(p)
-        for p in glob.glob(str(tmp_path / "bk" / "routed_backups" / "gen-*"))
-    )
-    assert gen_dirs == ["gen-1", "gen-2"]  # 2 newest of gens 0..2
-    for g in gen_dirs:
-        gp = str(tmp_path / "bk" / "routed_backups" / g / "sink=only")
-        assert len(glob.glob(gp + "/part-*")) == 4  # complete generation
-        assert spark.read.parquet(gp).count() == n
-
-
 def test_sink_catalog_iceberg_invocation_chain(spark, turns):
     """The Iceberg jar cannot be staged offline (channels documented on
     the skip-marked end-to-end test above), but the branch's LOGIC is
@@ -793,81 +711,6 @@ def test_sink_catalog_iceberg_invocation_chain(spark, turns):
         )
 
 
-def test_write_routed_max_days_age_retention(spark, turns, tmp_path):
-    """rotation.max_days (lumberjack MaxAge): backup generations older
-    than 24h*N by filesystem modification time are deleted; fresh ones
-    and the live generation are kept."""
-    import glob
-    import os
-
-    tagged = turns.withColumn("_route", F.lit("all"))
-    base = str(tmp_path / "age")
-    # two writes -> one backup generation (gen-0)
-    connectors.write_routed(tagged, {"all": ["only"]}, base, max_days=1)
-    connectors.write_routed(tagged, {"all": ["only"]}, base, max_days=1)
-    gen0 = os.path.join(base, "routed_backups", "gen-0")
-    assert os.path.isdir(os.path.join(gen0, "sink=only"))
-    # age gen-0 beyond the cutoff (pruning reads the GENERATION dir's
-    # modtime), then a third write prunes it while the (fresh) gen-1
-    # from that same write survives
-    os.utime(gen0, (1000, 1000))
-    connectors.write_routed(tagged, {"all": ["only"]}, base, max_days=1)
-    gens = sorted(
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(base, "routed_backups", "gen-*"))
-    )
-    assert gens == ["gen-1"]
-    n = turns.count()
-    assert spark.read.parquet(os.path.join(base, "routed", "sink=only")).count() == n
-
-
-def test_write_routed_max_days_zero_rejected(spark, turns, tmp_path):
-    # lumberjack MaxAge=0 means disabled; here that's None — an explicit
-    # 0 would silently delete every backup, so it fails loudly instead
-    tagged = turns.withColumn("_route", F.lit("all"))
-    with pytest.raises(ValueError, match="max_days"):
-        connectors.write_routed(
-            tagged, {"all": ["only"]}, str(tmp_path / "z"), max_days=0
-        )
-
-
-def test_write_routed_rotation_staging_and_dropped_sinks(spark, turns, tmp_path):
-    """With rotation on: max_backups=0 retains ALL generations
-    (lumberjack's zero value); a sink present on disk but dropped from
-    a later run's config still rotates to a backup instead of being
-    destroyed by the overwrite; no staging residue is left behind."""
-    import glob
-    import os
-
-    base = str(tmp_path / "rot")
-    two = turns.withColumn(
-        "_route", F.when(F.col("role") == "user", "u").otherwise("rest")
-    )
-    n = turns.count()
-    connectors.write_routed(two, {"u": ["a", "b"]}, base, max_backups=0)
-    # second run drops sink b entirely
-    one = turns.withColumn("_route", F.lit("all"))
-    paths = connectors.write_routed(one, {"all": ["a"]}, base, max_backups=0)
-    # live tree holds only the new generation's sinks
-    live_sinks = sorted(
-        os.path.basename(p) for p in glob.glob(base + "/routed/sink=*")
-    )
-    assert live_sinks == ["sink=a"]
-    assert spark.read.parquet(paths["a"]).count() == n
-    # the dropped sink's data survived as a backup generation
-    b_gens = glob.glob(base + "/routed_backups/gen-*/sink=b")
-    assert len(b_gens) == 1
-    assert spark.read.parquet(b_gens[0]).count() > 0
-    # max_backups=0 retained sink a's prior generation too
-    assert len(glob.glob(base + "/routed_backups/gen-*/sink=a")) == 1
-    # third run: still retain-all -> two generations for sink a
-    connectors.write_routed(one, {"all": ["a"]}, base, max_backups=0)
-    assert len(glob.glob(base + "/routed_backups/gen-*/sink=a")) == 2
-    assert not os.path.exists(base + "/routed__staging")
-    with pytest.raises(ValueError, match="max_backups"):
-        connectors.write_routed(one, {"all": ["a"]}, base, max_backups=-1)
-
-
 def test_config_rejects_operators_outside_logstransform(spark, sf_dir):
     from opentelemetry_collector_contrib_spark.plans import config_pipeline as cfgp2
 
@@ -882,58 +725,112 @@ def test_config_rejects_operators_outside_logstransform(spark, sf_dir):
 
 
 def test_write_routed_recovers_stranded_staging(spark, turns, tmp_path):
-    """Crash-window recovery: if a prior run died after deleting the
-    live tree but before renaming staging in (the one window where the
-    committed generation exists ONLY in staging, marked by _SUCCESS),
-    the next rotating write promotes it — so its rows end up as a
-    normal backup generation, never silently destroyed."""
-    import glob
+    """Crash-window recovery: if a prior run died after moving the live
+    tree aside but before renaming staging in (the committed tree exists
+    ONLY in staging, marked by _SUCCESS), recovery promotes it instead
+    of discarding it; staging without _SUCCESS is failed-job debris and
+    is discarded."""
     import os
     import shutil
 
     base = str(tmp_path / "rec")
+    live, staging = base + "/routed", base + "/routed__staging"
     tagged = turns.withColumn("_route", F.lit("all"))
     n = turns.count()
-    connectors.write_routed(tagged, {"all": ["only"]}, base, max_backups=2)
+    connectors.write_routed(tagged, {"all": ["only"]}, base)
     # simulate the crash: live tree became staging (with _SUCCESS), live gone
-    shutil.move(base + "/routed", base + "/routed__staging")
-    assert os.path.exists(base + "/routed__staging/_SUCCESS")
-    paths = connectors.write_routed(
-        tagged, {"all": ["only"]}, base, max_backups=2
-    )
-    # live = the new write; the stranded generation became gen-0
-    assert spark.read.parquet(paths["only"]).count() == n
-    gens = glob.glob(base + "/routed_backups/gen-*/sink=only")
-    assert len(gens) == 1
-    assert spark.read.parquet(gens[0]).count() == n
+    shutil.move(live, staging)
+    assert os.path.exists(staging + "/_SUCCESS")
+    connectors._recover_or_clear_staging(spark, staging, live)
+    assert spark.read.parquet(live + "/sink=only").count() == n  # promoted
     # staging WITHOUT _SUCCESS (failed job debris) is discarded instead
-    os.makedirs(base + "/routed__staging/sink=only", exist_ok=True)
-    with open(base + "/routed__staging/sink=only/part-junk", "w") as f:
+    os.makedirs(staging + "/sink=only")
+    with open(staging + "/sink=only/part-junk", "w") as f:
         f.write("x")
-    connectors.write_routed(tagged, {"all": ["only"]}, base, max_backups=2)
-    assert not os.path.exists(base + "/routed__staging")
+    connectors._recover_or_clear_staging(spark, staging, live)
+    assert not os.path.exists(staging)
+    assert spark.read.parquet(live + "/sink=only").count() == n
+    paths = connectors.write_routed(tagged, {"all": ["only"]}, base)
     assert spark.read.parquet(paths["only"]).count() == n
+    assert not os.path.exists(staging)
+    assert not os.path.exists(base + "/routed__old")
 
 
 def test_write_routed_recovers_after_rotate_precommit_crash(spark, turns, tmp_path):
-    # crash between rotation and the live-tree delete: live root exists
-    # but holds only _SUCCESS (no sink dirs) while staging carries the
-    # committed generation — recovery must promote, not discard
-    import glob
+    # live root exists but holds only _SUCCESS (no sink dirs) while
+    # staging carries the committed tree — recovery must promote, not
+    # discard
     import os
     import shutil
 
     base = str(tmp_path / "rec2")
+    live, staging = base + "/routed", base + "/routed__staging"
     tagged = turns.withColumn("_route", F.lit("all"))
     n = turns.count()
-    connectors.write_routed(tagged, {"all": ["only"]}, base, max_backups=2)
-    shutil.move(base + "/routed", base + "/routed__staging")
-    os.makedirs(base + "/routed")
-    open(base + "/routed/_SUCCESS", "w").close()  # sink-less live root
-    paths = connectors.write_routed(
-        tagged, {"all": ["only"]}, base, max_backups=2
-    )
+    connectors.write_routed(tagged, {"all": ["only"]}, base)
+    shutil.move(live, staging)
+    os.makedirs(live)
+    open(live + "/_SUCCESS", "w").close()  # sink-less live root
+    connectors._recover_or_clear_staging(spark, staging, live)
+    assert spark.read.parquet(live + "/sink=only").count() == n  # promoted
+    assert not os.path.exists(staging)
+    paths = connectors.write_routed(tagged, {"all": ["only"]}, base)
     assert spark.read.parquet(paths["only"]).count() == n
-    gens = glob.glob(base + "/routed_backups/gen-*/sink=only")
-    assert len(gens) == 1
-    assert spark.read.parquet(gens[0]).count() == n
+    assert not os.path.exists(staging)
+    assert not os.path.exists(base + "/routed__old")
+
+
+@pytest.mark.parametrize(
+    "fault,kept",
+    [
+        (None, "new"),
+        ("job", "old"),  # F.raise_error on one row fails the write job
+        ("move_aside", "new"),  # crash right after routed -> routed__old
+        ("swap_in", "new"),  # crash right after routed__staging -> routed
+    ],
+)
+def test_write_routed_keeps_old_or_new_output(
+    spark, tmp_path, monkeypatch, fault, kept
+):
+    """A write that fails in its job, or crashes after either rename of
+    the swap, leaves every live sink holding the whole old output or the
+    whole new one once recovery has run — never empty, partial or
+    doubled — and no staging or old tree behind. The new output drops
+    sink b, so it must leave with the old tree."""
+    import glob
+    import os
+
+    base = str(tmp_path / "swap")
+    live = base + "/routed"
+    old = spark.range(1000).withColumn("_route", F.lit("all"))
+    connectors.write_routed(old, {"all": ["a", "b"]}, base)
+    new = spark.range(600).withColumn("_route", F.lit("all"))
+    if fault == "job":
+        boom = F.when(F.col("id") == 599, F.raise_error(F.lit("injected")))
+        new = new.withColumn("boom", boom.cast("string"))
+    crash_at = {"move_aside": 1, "swap_in": 2}.get(fault)
+    if crash_at:
+        real_rename, calls = connectors._fs_rename, []
+
+        def rename_then_crash(*args):
+            real_rename(*args)
+            calls.append(args)
+            if len(calls) == crash_at:
+                raise IOError("injected crash")
+
+        monkeypatch.setattr(connectors, "_fs_rename", rename_then_crash)
+    if fault is None:
+        connectors.write_routed(new, {"all": ["a"]}, base)
+    else:
+        with pytest.raises(Exception, match="injected"):
+            connectors.write_routed(new, {"all": ["a"]}, base)
+        monkeypatch.undo()
+        connectors._recover_or_clear_staging(spark, live + "__staging", live)
+    counts = {
+        os.path.basename(p): spark.read.parquet(p).count()
+        for p in glob.glob(live + "/sink=*")
+    }
+    expected = {"old": {"sink=a": 1000, "sink=b": 1000}, "new": {"sink=a": 600}}
+    assert counts == expected[kept]
+    assert not os.path.exists(live + "__staging")
+    assert not os.path.exists(live + "__old")

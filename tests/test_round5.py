@@ -4,9 +4,6 @@ bot/webview/TV UserAgent blocks.
 ADVICE defects pinned here:
   1. filter_drop(drop_ratio) hashed map-typed columns with xxhash64 →
      AnalysisException under spark.sql.legacy.allowHashOnMapType=false
-  2. write_routed max_backups deleted the current write's own files
-     (covered in tests/test_plans.py::test_write_routed_max_megabytes_
-     and_backups)
   4. OTTL time ± duration truncated ns→µs toward zero via a double
      divide (Go does exact integer ns arithmetic; floor semantics)
 """
@@ -248,37 +245,3 @@ def test_useragent_other_rate_on_realistic_mix(spark):
     )
     rate = other / len(UA_CASES)
     assert rate <= 1 / len(UA_CASES) + 1e-9  # only the planted unknown
-
-
-# --- write_routed byte cap ----------------------------------------------
-
-
-def test_write_routed_cap_sized_by_largest_rowed_sink(spark, tmp_path):
-    """maxRecordsPerFile is one global writer option; the byte-cap
-    translation must size it for the sink with the LARGEST rows so no
-    sink's files blow the cap (small-rowed sinks just rotate early)."""
-    import glob
-    import os
-
-    from opentelemetry_collector_contrib_spark.operators import connectors
-
-    big = F.concat_ws("", F.array_repeat(F.lit("x"), 20000))
-    df = (
-        spark.range(2000)
-        .select(
-            F.col("id").alias("conv_id"),
-            F.when(F.col("id") % 2 == 0, F.lit("small")).otherwise(big).alias(
-                "payload"
-            ),
-            F.when(F.col("id") % 2 == 0, F.lit("tiny")).otherwise(
-                F.lit("fat")
-            ).alias("_route"),
-        )
-    )
-    paths = connectors.write_routed(
-        df, {"tiny": ["tiny"], "fat": ["fat"]}, str(tmp_path / "ps"),
-        max_megabytes=1, files_per_sink=2,
-    )
-    for sink, p in paths.items():
-        for f in glob.glob(p + "/*.parquet"):
-            assert os.path.getsize(f) <= 1 << 20, (sink, f)
