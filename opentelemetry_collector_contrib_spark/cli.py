@@ -3,20 +3,19 @@
 Production invocation (north rule: spark-submit --py-files on a
 multi-executor cluster):
 
-    cd /root/repo && zip -r /tmp/otelspark.zip opentelemetry_collector_contrib_spark
-    spark-submit --py-files /tmp/otelspark.zip \
+    zip -r otelspark.zip opentelemetry_collector_contrib_spark  # from the repo root
+    spark-submit --py-files otelspark.zip \
         --conf spark.sql.adaptive.enabled=true \
         opentelemetry_collector_contrib_spark/cli.py \
-        --input-dir /data/sf --out-dir /data/out \
-        [--parse-mode native|arrow] [--with-histograms]
+        --input-dir /data/sf --out-dir /data/out [--with-histograms]
 
 Streaming mode adds ``--streaming --checkpoint-dir /data/ck`` and takes
 two more stream-only flags, ``--dims-dir`` and ``--flush-interval``
 (seconds; without it the stream processes the files present, then
-stops). ``--parse-mode`` and ``--with-histograms`` are batch-only. Every
-flag is checked before the SparkSession starts: a stream-only flag in
-batch mode, a batch-only flag in streaming mode or ``--streaming``
-without ``--checkpoint-dir`` exits with status 2.
+stops). ``--with-histograms`` is batch-only. Every flag is checked
+before the SparkSession starts: a stream-only flag in batch mode, a
+batch-only flag in streaming mode or ``--streaming`` without
+``--checkpoint-dir`` exits with status 2.
 
 In local mode (no cluster manager) the same file runs directly:
     python -m opentelemetry_collector_contrib_spark.cli --input-dir ... --out-dir ...
@@ -39,8 +38,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="directory with the base parquet tables (or, with "
                          "--streaming, transcript-shaped parquet files)")
     ap.add_argument("--out-dir", required=True)
-    ap.add_argument("--parse-mode", choices=["native", "arrow"], default=None,
-                    help="batch only (default: native)")
     ap.add_argument("--with-histograms", action="store_true",
                     help="batch only: emit the full metric block (per-sink "
                          "counts + per-sink/role + per-tool histograms, one "
@@ -60,8 +57,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.streaming:
         if not args.checkpoint_dir:
             ap.error("--streaming requires --checkpoint-dir")
-        misplaced = {"--parse-mode": args.parse_mode is not None,
-                     "--with-histograms": args.with_histograms}
+        misplaced = {"--with-histograms": args.with_histograms}
     else:
         misplaced = {"--checkpoint-dir": args.checkpoint_dir is not None,
                      "--dims-dir": args.dims_dir is not None,
@@ -103,7 +99,6 @@ def main(argv: list[str] | None = None) -> int:
 
     res = pipeline.run(
         spark, args.input_dir, out_dir=args.out_dir,
-        parse_mode=args.parse_mode or "native",
         with_histograms=args.with_histograms,
     )
     print(json.dumps(res, default=str))

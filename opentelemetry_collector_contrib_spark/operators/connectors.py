@@ -81,7 +81,6 @@ def route_logs(
     *,
     default_sinks: list[str] | None = None,
     conv_col: str = "conv_id",
-    resource_strategy: str = "broadcast",
     request_metadata: dict | None = None,
 ) -> tuple[DataFrame, dict[str, list[str]]]:
     """Compile the routing table into ONE first-match-wins tag column.
@@ -93,31 +92,15 @@ def route_logs(
     route-label -> sink-list map).  Rows with ``_route`` null matched
     nothing and there is no default: they are dropped by the writer.
 
-    Resource-context conditions ("any row of the conversation matches
-    ⇒ the whole conversation matches") have two physical strategies:
-
-      * ``broadcast`` (default): aggregate the DISTINCT matching conv ids
-        (a second pass over ``df``'s lineage + map-side-combined
-        distinct) and broadcast them back as a semi-join flag. For an
-        input not partitioned by conversation this avoids exchanging
-        every routed column. Matches the k8sattributes informer-cache
-        shape.
-      * ``window``: ``max(cond) OVER (PARTITION BY conv)``. A full
-        shuffle of ``df`` unless it is already hash-partitioned by
-        ``conv_col``, in which case it adds no exchange and no second
-        pass. The flagship (plans.pipeline.build) uses it: its source
-        numbers the turns in a window partitioned by conv_id. Also the
-        fallback when the matching conv set could be too large to
-        broadcast.
+    A resource-context condition ("any row of the conversation matches
+    ⇒ the whole conversation matches") is ``max(cond) OVER (PARTITION BY
+    conv_col)``. That is a full shuffle of ``df`` unless ``df`` is
+    already hash-partitioned by ``conv_col``, as the flagship's source is
+    (it numbers the turns in a window partitioned by conv_id): then the
+    route adds no exchange and no second pass over the input.
     """
     conds: list[tuple[Column, str]] = []
     sink_map: dict[str, list[str]] = {}
-    needs_window = any(r.context == "resource" for r in routes)
-    w = (
-        Window.partitionBy(conv_col)
-        if needs_window and resource_strategy == "window"
-        else None
-    )
     for i, r in enumerate(routes):
         cond = r.condition
         if r.context == "request":
@@ -126,25 +109,12 @@ def route_logs(
             # route unless an earlier one won; unmatched: route is inert)
             cond = F.lit(eval_request_condition(str(cond), request_metadata))
         elif r.context == "resource":
-            if resource_strategy == "window":
-                cond = F.max(cond.cast("int")).over(w) == 1
-            else:
-                flag = f"_rc_{i}"
-                matches = (
-                    df.filter(F.coalesce(r.condition, F.lit(False)))
-                    .select(F.col(conv_col))
-                    .distinct()
-                    .withColumn(flag, F.lit(True))
-                )
-                df = df.join(F.broadcast(matches), on=conv_col, how="left")
-                cond = F.col(flag).isNotNull()
+            cond = F.max(cond.cast("int")).over(Window.partitionBy(conv_col)) == 1
         label = r.label(i)
         conds.append((F.coalesce(cond, F.lit(False)), label))
         sink_map[label] = list(r.sinks)
     default = "default" if default_sinks else None
-    tagged = df.withColumn("_route", router_tag(conds, default=default)).drop(
-        *[f"_rc_{i}" for i in range(len(routes))]
-    )
+    tagged = df.withColumn("_route", router_tag(conds, default=default))
     # per-route attach attributes: stamped after the first-match tag so a
     # row gets exactly its winning route's attributes
     attach_keys = {k for r in routes if r.attach for k in r.attach}

@@ -14,7 +14,9 @@ Example::
         "processors": [
             {"type": "regex_parser", "pattern": ..., "groups": [...]},
             {"type": "key_value_parser", "parse_from": "msg", "out": "kv"},
-            {"type": "severity_parser", "parse_from": "level"},
+            {"type": "severity_parser", "parse_from": "level",
+             "observe": {"name": "parse",
+                         "parse_errors": "sum(cast(NOT parse_ok AS long))"}},
             {"type": "enrich", "dim": "conv_dim", "on": "conv_id"},
             {"type": "ottl", "statements": ["set(x, 'y') where ..."]},
             {"type": "filter", "drop_where": "role = 'system'"},
@@ -27,7 +29,7 @@ Example::
     }
 
 Unknown processor types fail at build time (registry.go semantics), not
-mid-job.
+mid-job. The flagship job is one such config (``plans.pipeline.FLAGSHIP``).
 """
 
 from __future__ import annotations
@@ -312,10 +314,15 @@ def build_from_config(
 ) -> tuple[DataFrame, dict[str, list[str]]]:
     """Compile a config dict to (tagged DataFrame, sink_map).
 
+    A processor's ``observe`` entry, ``{"name": stage, metric: sql, ...}``,
+    counts the rows leaving it under ``stage`` plus one aggregate per
+    extra key (``lineage.observe(df, stage, metric=F.expr(sql))``). Stages
+    are observed only when a ``lineage`` is given: Spark rejects an
+    ``Observation`` on a streaming DataFrame.
+
     ``request_metadata`` feeds request-context routes (``context:
     request`` entries keep their condition as the raw
     ``request["k"] == "v"`` string, resolved per run on the driver)."""
-    lin = lineage or Lineage()
     # validate the WHOLE config before any stage runs — including
     # operators nested inside logstransform — so a typo'd type or a
     # missing required key in an externally supplied config fails here
@@ -330,6 +337,11 @@ def build_from_config(
                     raise ValueError(
                         f"{what} {p['type']!r} is missing required key {key!r}"
                     )
+            obs = p.get("observe")
+            if obs is not None and not (isinstance(obs, dict) and "name" in obs):
+                raise ValueError(
+                    f"{what} {p['type']!r} observe entry needs a 'name'"
+                )
             if p["type"] == "logstransform":
                 _check(p.get("operators", []), "logstransform operator")
             elif "operators" in p:
@@ -344,10 +356,11 @@ def build_from_config(
     _check(config.get("processors", []), "processor")
 
     df = source if source is not None else src.transcripts_df(spark, sf_dir)
-    for i, p in enumerate(config.get("processors", [])):
+    for p in config.get("processors", []):
         df = STAGE_REGISTRY[p["type"]](df, spark, sf_dir, p)
-        if p.get("observe"):
-            df = lin.observe(df, f"{i}:{p['type']}")
+        if lineage is not None and "observe" in p:
+            extra = {k: F.expr(v) for k, v in p["observe"].items() if k != "name"}
+            df = lineage.observe(df, p["observe"]["name"], **extra)
 
     routes = [
         connectors.Route(
@@ -367,7 +380,6 @@ def build_from_config(
         return connectors.route_logs(
             df, routes,
             default_sinks=config.get("default_sinks"),
-            resource_strategy=config.get("resource_strategy", "broadcast"),
             request_metadata=request_metadata,
         )
     return df, {}

@@ -16,9 +16,12 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 @dataclass
 class Lineage:
-    """Collects per-stage row counters without extra passes."""
+    """Collects per-stage row counters without extra passes, and the
+    observed frame of each stage (``frames``), so a caller can take a
+    stage's output from a compiled plan."""
 
     observations: dict[str, Observation] = field(default_factory=dict)
+    frames: dict[str, DataFrame] = field(default_factory=dict)
 
     def observe(self, df: DataFrame, stage: str, **extra) -> DataFrame:
         """Attach rows_in/rows_out style metrics to a stage boundary.
@@ -30,7 +33,8 @@ class Lineage:
         self.observations[stage] = obs
         metrics = [F.count(F.lit(1)).alias("rows")]
         metrics += [c.alias(n) for n, c in extra.items()]
-        return df.observe(obs, *metrics)
+        self.frames[stage] = df.observe(obs, *metrics)
+        return self.frames[stage]
 
     def collect(self) -> dict[str, dict]:
         """Metric values for all stages whose job has completed."""

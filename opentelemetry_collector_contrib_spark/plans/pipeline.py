@@ -1,7 +1,10 @@
 """The flagship parse -> enrich -> route -> aggregate pipeline.
 
-This composes the operator stages exactly as the reference's logs path
-does (SURVEY.md north rule):
+One config (``FLAGSHIP``) lists the stages of the reference's logs path
+(SURVEY.md north rule); ``config_pipeline.build_from_config`` compiles
+it, as the reference builds its pipeline from config
+(pkg/stanza/pipeline/directed.go:29-67). Batch and streaming compile the
+same config:
 
   filelog receiver (transcripts source)
     -> regex_parser (vectorized; on_error=send => parse_ok column)
@@ -31,9 +34,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import connectors, parsers, processors
-from ..schema import PARSE_PATTERN, PARSE_GROUPS, PARSE_PATTERN_NAMED
-from ..sources import transcripts as src
+from ..operators import connectors
+from ..schema import PARSE_PATTERN, PARSE_GROUPS
+from .config_pipeline import build_from_config
 from .lineage import Lineage
 
 
@@ -46,78 +49,50 @@ class PipelineResult:
     lineage: Lineage
 
 
-def default_routes() -> list[connectors.Route]:
-    """The flagship routing table, in match order (first match wins).
-    Batch uses all of it; streaming takes the ``context == "log"``
-    subset. A function, not a constant: ``F.col`` needs a live session."""
-    return [
+#: The flagship job as one config, compiled by ``build`` (batch) and by
+#: ``streaming.pipeline.build_stream`` (its ``context == "log"`` routes).
+#: Routes match in order, first match wins; conditions are Spark SQL, so
+#: the table needs no live session.
+FLAGSHIP = {
+    "processors": [
+        # parse stage (regex_parser; on_error=send => parse_ok column)
+        {"type": "regex_parser", "pattern": PARSE_PATTERN, "groups": PARSE_GROUPS},
+        {"type": "key_value_parser", "parse_from": "msg", "out": "kv"},
+        {"type": "severity_parser", "parse_from": "level",
+         "observe": {"name": "parse",
+                     "parse_errors": "sum(cast(NOT parse_ok AS long))"}},
+        # enrich stage (k8sattributes analog, conv -> tool cascade)
+        {"type": "enrich", "dim": "conv_dim", "on": "conv_id"},
+        {"type": "enrich", "dim": "tool_dim", "on": "tool",
+         "observe": {"name": "enrich"}},
+    ],
+    "routes": [
         # row-level: ERROR/FATAL turns -> errors + audit (route duplication)
-        connectors.Route(
-            condition=F.col("level").isin("ERROR", "FATAL"),
-            sinks=["errors", "audit"],
-            context="log",
-            name="errors",
-        ),
+        {"name": "errors", "condition": "level IN ('ERROR','FATAL')",
+         "context": "log", "sinks": ["errors", "audit"]},
         # resource-level: any FATAL in the conversation -> whole conv to incident
-        connectors.Route(
-            condition=F.col("level") == "FATAL",
-            sinks=["incident"],
-            context="resource",
-            name="incident",
-        ),
+        {"name": "incident", "condition": "level = 'FATAL'",
+         "context": "resource", "sinks": ["incident"]},
         # row-level: risky tool usage
-        connectors.Route(
-            condition=(F.col("tool") != "") & (F.col("risk_tier") == "high"),
-            sinks=["risky_tools"],
-            context="log",
-            name="risky_tools",
-        ),
-    ]
+        {"name": "risky_tools", "condition": "tool <> '' AND risk_tier = 'high'",
+         "context": "log", "sinks": ["risky_tools"]},
+    ],
+    "default_sinks": ["catchall"],
+}
 
 
 def build(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    parse_mode: str = "native",
-    lineage: Lineage | None = None,
+    spark: SparkSession, sf_dir: str, *, lineage: Lineage | None = None
 ) -> PipelineResult:
-    """Assemble the full logical plan; nothing executes until an action."""
+    """Compile ``FLAGSHIP``; nothing executes until an action. The
+    resource-context route's window reuses the source's conv_id
+    exchange."""
     lin = lineage or Lineage()
-
-    turns = src.transcripts_df(spark, sf_dir)
-
-    # ---- parse stage (regex_parser; on_error=send) ----
-    if parse_mode == "arrow":
-        parsed = parsers.regex_parse_arrow(turns, PARSE_PATTERN_NAMED)
-    else:
-        parsed = parsers.regex_parse(turns, PARSE_PATTERN, PARSE_GROUPS)
-    parsed = parsers.key_value_parse(
-        parsed, parse_from="msg", pair_delim=" ", kv_delim="=", out="kv"
-    )
-    parsed = parsers.severity_parse(parsed, parse_from="level")
-    parsed = lin.observe(
-        parsed, "parse", parse_errors=F.sum((~F.col("parse_ok")).cast("long"))
-    )
-
-    # ---- enrich stage (k8sattributes analog, conv -> tool cascade) ----
-    conv_dim = src.conv_dim_df(spark, sf_dir)
-    tool_dim = src.tool_dim_df(spark)
-    enriched = processors.enrich_lookup(parsed, conv_dim, on="conv_id")
-    enriched = processors.enrich_lookup(enriched, tool_dim, on="tool")
-    enriched = lin.observe(enriched, "enrich")
-
-    # ---- route stage (routing connector) ----
-    # the resource-context window reuses the source's conv_id exchange
-    tagged, sink_map = connectors.route_logs(
-        enriched,
-        default_routes(),
-        default_sinks=["catchall"],
-        resource_strategy="window",
-    )
+    tagged, sink_map = build_from_config(spark, sf_dir, FLAGSHIP, lineage=lin)
     tagged = lin.observe(tagged, "route")
-
-    return PipelineResult(parsed, enriched, tagged, sink_map, lin)
+    return PipelineResult(
+        lin.frames["parse"], lin.frames["enrich"], tagged, sink_map, lin
+    )
 
 
 #: The north star's aggregate block as one countconnector config: per-sink
@@ -154,7 +129,6 @@ def run(
     sf_dir: str,
     out_dir: str | None = None,
     *,
-    parse_mode: str = "native",
     with_histograms: bool = False,
 ) -> dict:
     """Execute end-to-end; optionally write per-sink tables; return metrics.
@@ -165,7 +139,7 @@ def run(
     written. ``per_sink_counts`` is its ``records.per_sink`` slice;
     ``with_histograms`` adds the whole block under ``out["metrics"]``.
     ``lineage`` holds the stage counters of the routed action."""
-    result = build(spark, sf_dir, parse_mode=parse_mode)
+    result = build(spark, sf_dir)
     if out_dir:
         paths = connectors.write_routed(result.tagged, result.sink_map, out_dir)
         written = spark.read.schema(METRICS_SCHEMA).parquet(

@@ -16,7 +16,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
+    TimestampNTZType,
 )
 
 # --------------------------------------------------------------------------
@@ -29,7 +29,8 @@ TRANSCRIPT_SCHEMA = StructType(
         StructField("role", StringType(), True),
         StructField("text", StringType(), True),
         StructField("tool", StringType(), True),
-        StructField("ts", TimestampType(), True),
+        # zoneless, as the batch source derives it from events parquet
+        StructField("ts", TimestampNTZType(), True),
     ]
 )
 

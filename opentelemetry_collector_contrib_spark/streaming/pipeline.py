@@ -18,13 +18,16 @@ Reference mapping:
   * obsreport accepted/sent counters -> per-batch metrics rows appended
     to a metrics table by foreachBatch.
 
-The stage functions are the SAME code as batch (parsers/processors/
-connectors modules): everything in the hot path is a narrow column
+The stages are the SAME config as batch (``plans.pipeline.FLAGSHIP``,
+compiled by ``config_pipeline.build_from_config``), so stream sinks get
+batch's columns: everything in the hot path is a narrow column
 transformation or a stream-static broadcast join, both streaming-legal.
 The one batch-only construct is the resource-context route (a window
 over conv_id); streaming restricts the routing table to log-context
 routes — the reference's routing connector is likewise per-record when
-run in `log` context (connector/routingconnector/logs.go:86-100).
+run in `log` context (connector/routingconnector/logs.go:86-100). The
+per-stage ``observe`` counters are batch-only too: Spark rejects an
+``Observation`` on a streaming DataFrame.
 
 No event-time watermark is used, mirroring the reference's
 processing-time-only semantics (SURVEY.md §2.8).
@@ -34,10 +37,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import connectors, parsers, processors
-from ..plans.pipeline import default_routes
-from ..schema import PARSE_PATTERN, PARSE_GROUPS, TRANSCRIPT_SCHEMA
-from ..sources import transcripts as src
+from ..operators import connectors
+from ..plans.config_pipeline import build_from_config
+from ..plans.pipeline import FLAGSHIP
+from ..schema import TRANSCRIPT_SCHEMA
 
 __all__ = ["read_transcript_stream", "build_stream", "run_to_sinks"]
 
@@ -57,19 +60,13 @@ def read_transcript_stream(
 def build_stream(
     spark: SparkSession, stream: DataFrame, sf_dir: str
 ) -> tuple[DataFrame, dict[str, list[str]]]:
-    """Same logical stages as plans.pipeline.build, on a streaming DF.
-
-    Routing table = the log-context subset of
-    plans.pipeline.default_routes() (resource context needs a
-    conversation-wide window -> batch only)."""
-    parsed = parsers.regex_parse(stream, PARSE_PATTERN, PARSE_GROUPS)
-    parsed = parsers.severity_parse(parsed, parse_from="level")
-    enriched = processors.enrich_lookup(
-        parsed, src.conv_dim_df(spark, sf_dir), on="conv_id"
+    """``plans.pipeline.FLAGSHIP`` compiled over a streaming DF, with the
+    config's log-context routes (resource context needs a
+    conversation-wide window -> batch only) and no lineage."""
+    routes = [r for r in FLAGSHIP["routes"] if r["context"] == "log"]
+    return build_from_config(
+        spark, sf_dir, {**FLAGSHIP, "routes": routes}, source=stream
     )
-    enriched = processors.enrich_lookup(enriched, src.tool_dim_df(spark), on="tool")
-    routes = [r for r in default_routes() if r.context == "log"]
-    return connectors.route_logs(enriched, routes, default_sinks=["catchall"])
 
 
 def run_to_sinks(

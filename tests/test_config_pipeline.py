@@ -1,5 +1,5 @@
-"""Config-driven pipeline: dict config reproduces the hand-built flagship
-pipeline exactly, and unknown stages fail at build time."""
+"""Config-driven pipeline: stage types compile from a dict, the flagship
+config survives a YAML round trip, and bad configs fail at build time."""
 
 from __future__ import annotations
 
@@ -20,39 +20,6 @@ from opentelemetry_collector_contrib_spark.schema import (  # noqa: E402
     PARSE_PATTERN,
     PARSE_GROUPS,
 )
-
-FLAGSHIP_CONFIG = {
-    "processors": [
-        {"type": "regex_parser", "pattern": PARSE_PATTERN, "groups": PARSE_GROUPS},
-        {"type": "key_value_parser", "parse_from": "msg", "out": "kv"},
-        {"type": "severity_parser", "parse_from": "level"},
-        {"type": "enrich", "dim": "conv_dim", "on": "conv_id"},
-        {"type": "enrich", "dim": "tool_dim", "on": "tool"},
-    ],
-    "routes": [
-        {"name": "errors", "condition": "level IN ('ERROR','FATAL')",
-         "context": "log", "sinks": ["errors", "audit"]},
-        {"name": "incident", "condition": "level = 'FATAL'",
-         "context": "resource", "sinks": ["incident"]},
-        {"name": "risky_tools", "condition": "tool <> '' AND risk_tier = 'high'",
-         "context": "log", "sinks": ["risky_tools"]},
-    ],
-    "default_sinks": ["catchall"],
-}
-
-
-def test_config_pipeline_matches_hand_built(spark, sf_dir):
-    tagged, sink_map = cfgp.build_from_config(spark, sf_dir, FLAGSHIP_CONFIG)
-    got = {
-        r["sink"]: r["n"]
-        for r in connectors.routed_union(tagged, sink_map)
-        .groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    expect = {
-        r["sink"]: r["n"]
-        for r in pipeline.per_sink_counts(pipeline.build(spark, sf_dir)).collect()
-    }
-    assert got == expect
 
 
 def test_config_pipeline_with_ottl_and_filter(spark, sf_dir):
@@ -101,6 +68,8 @@ def test_missing_required_key_fails_before_any_stage_runs(
              {"type": "logstransform", "operators": [{"type": "filter"}]}],
             "'filter'.*'drop_where'",
         ),
+        ([first, {"type": "filter", "drop_where": "false", "observe": True}],
+         "'filter' observe entry needs a 'name'"),
     ]
     for processors, match in bad:
         with pytest.raises(ValueError, match=match):
@@ -145,8 +114,9 @@ def test_yaml_config_roundtrip(spark, sf_dir, tmp_path):
     import yaml
 
     p = tmp_path / "pipe.yaml"
-    p.write_text(yaml.safe_dump(FLAGSHIP_CONFIG))
+    p.write_text(yaml.safe_dump(pipeline.FLAGSHIP))
     cfg = cfgp.load_config(str(p))
+    assert cfg == pipeline.FLAGSHIP
     tagged, sink_map = cfgp.build_from_config(spark, sf_dir, cfg)
     got = {
         r["sink"]: r["n"]

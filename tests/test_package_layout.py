@@ -11,12 +11,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "opentelemetry_collector_contrib_spark"
 PKG_DIR = os.path.join(ROOT, PKG)
 
-# driver contract, spark-submit CLI, batch run, config-built run, streaming run
+# driver contract, spark-submit CLI, batch run, streaming run
 ENTRY_FILES = [
     os.path.join(ROOT, "__spark_entry__.py"),
     os.path.join(PKG_DIR, "cli.py"),
     os.path.join(PKG_DIR, "plans", "pipeline.py"),
-    os.path.join(PKG_DIR, "plans", "config_pipeline.py"),
     os.path.join(PKG_DIR, "streaming", "pipeline.py"),
 ]
 

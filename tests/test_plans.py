@@ -1,5 +1,5 @@
 """plans/ layer: checkpoint resume, lineage counters, pipeline writes,
-routing strategy equivalence."""
+routing."""
 
 from __future__ import annotations
 
@@ -72,7 +72,7 @@ def test_pipeline_run_writes_readable_sinks(spark, sf_dir, tmp_path):
 def test_run_outputs_agree_across_paths(spark, sf_dir, tmp_path):
     """run()'s counts and metric block, read back from its written sinks or
     aggregated in memory, equal the standalone connectors on a fresh
-    build, for both parse paths."""
+    build."""
     from collections import Counter
 
     def block(rows):
@@ -84,16 +84,10 @@ def test_run_outputs_agree_across_paths(spark, sf_dir, tmp_path):
     metrics = pipeline.pipeline_metrics(result).collect()
     want_metrics = block(r.asDict() for r in metrics)
     assert len(want_metrics) == 30
-    for out_dir, mode in [
-        (str(tmp_path / "native"), "native"),
-        (None, "native"),
-        (str(tmp_path / "arrow"), "arrow"),
-    ]:
-        res = pipeline.run(
-            spark, sf_dir, out_dir, parse_mode=mode, with_histograms=True
-        )
-        assert res["per_sink_counts"] == want_counts, (out_dir, mode)
-        assert block(res["metrics"]) == want_metrics, (out_dir, mode)
+    for out_dir in [str(tmp_path / "out"), None]:
+        res = pipeline.run(spark, sf_dir, out_dir, with_histograms=True)
+        assert res["per_sink_counts"] == want_counts, out_dir
+        assert block(res["metrics"]) == want_metrics, out_dir
 
 
 def _input_copy(sf_dir, dest):
@@ -166,24 +160,6 @@ def test_build_leaves_session_temp_views_unchanged(spark, sf_dir):
         assert spark.table("customer").count() == 3
     finally:
         spark.catalog.dropTempView("customer")
-
-
-def test_resource_route_strategies_agree(spark, turns):
-    routes = [
-        connectors.Route(F.col("text").contains("FATAL"), ["inc"], "resource", "inc"),
-        connectors.Route(F.col("role") == "tool", ["tools"], "log", "tools"),
-    ]
-    outs = {}
-    for strat in ("broadcast", "window"):
-        tagged, sink_map = connectors.route_logs(
-            turns, routes, default_sinks=["rest"], resource_strategy=strat
-        )
-        routed = connectors.routed_union(tagged, sink_map)
-        outs[strat] = sorted(
-            (r["sink"], r["conv_id"], r["turn_idx"])
-            for r in routed.select("sink", "conv_id", "turn_idx").collect()
-        )
-    assert outs["broadcast"] == outs["window"]
 
 
 def test_route_attach_attributes(spark, turns):
@@ -665,7 +641,6 @@ def test_cli_rejects_misplaced_flags_before_spark_starts(sf_dir, tmp_path, monke
         batch + ["--dims-dir", sf_dir],
         batch + ["--flush-interval", "1"],
         batch + ["--streaming"],
-        batch + ["--streaming", "--checkpoint-dir", ck, "--parse-mode", "arrow"],
         batch + ["--streaming", "--checkpoint-dir", ck, "--with-histograms"],
     ]
 

@@ -70,6 +70,11 @@ def test_stream_matches_batch_per_sink_counts(spark, sf_dir, turns, tmp_path):
     )
     assert batch_rows == stream_rows
 
+    # one stage list: the stream writes the columns a batch run writes
+    pipeline.run(spark, sf_dir, out_dir=str(tmp_path / "batch"))
+    batch_routed = spark.read.parquet(str(tmp_path / "batch" / "routed"))
+    assert routed.schema.fields == batch_routed.schema.fields
+
 
 def test_stream_checkpoint_resume_no_duplicates(spark, sf_dir, turns, tmp_path):
     inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
