@@ -40,20 +40,3 @@ class Lineage:
         """Metric values for all stages whose job has completed."""
         return {k: dict(v.get) for k, v in self.observations.items()}
 
-
-def partition_metrics(df: DataFrame, stage: str, *, error_col: str | None = None):
-    """Per-partition lineage rows ``(stage, partition_id, rows, errors)``
-    — the distributed analog of obsreport's per-component counters
-    (SURVEY.md §4 item 4). A narrow groupBy on spark_partition_id (at
-    most one output row per partition, map-side combined); written
-    alongside checkpoints by ``checkpoint.write_stage(...,
-    with_lineage=True)`` so a resumed run can audit exactly what each
-    partition contributed."""
-    errors = (
-        F.sum(F.col(error_col).cast("long")) if error_col else F.lit(0).cast("long")
-    )
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("rows"), errors.alias("errors"))
-        .select(F.lit(stage).alias("stage"), "partition_id", "rows", "errors")
-    )

@@ -10,7 +10,7 @@ every sink/table call goes through this module:
   * without: parquet with ``partitionOverwriteMode=dynamic`` — an
     overwrite touches ONLY the partitions present in the incoming data,
     which is the parquet-level analog of Iceberg's overwritePartitions
-    and keeps re-runs idempotent (the checkpoint layer's requirement).
+    and keeps re-runs idempotent (a batch run resumes by rerunning).
 
 All query code is format-agnostic: DataFrame in, DataFrame out; scans
 get column pruning + predicate pushdown either way.

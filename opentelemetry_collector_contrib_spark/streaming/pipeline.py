@@ -6,17 +6,19 @@ Reference mapping:
     (pkg/stanza/fileconsumer/file.go; internal/checkpoint/checkpoint.go)
     -> `readStream` file source + the streaming checkpoint log: Spark's
     source offsets ARE the fingerprint+offset store, per file instead of
-    per byte-range. The sinks are at-least-once, not exactly-once: a
-    restart after the foreachBatch writes but before the batch's commit
-    replays the batch, and its append writes the rows a second time
-    (deleting ``commits/0`` and restarting doubles ``routed``).
+    per byte-range.
   * batching emitter 100 entries / 100 ms (helper/emitter.go:39-40)
     -> micro-batch trigger (`processingTime` every `flush_interval`
     seconds in production, `availableNow` in tests/backfills).
-  * per-sink exporters -> foreachBatch writing one partitionBy("sink")
-    parquet job per micro-batch, plus per-sink running counts.
-  * obsreport accepted/sent counters -> per-batch metrics rows appended
-    to a metrics table by foreachBatch.
+  * per-sink exporters -> Spark's parquet file sink, partitioned by
+    ``sink``: one write job per micro-batch. Its ``_spark_metadata`` log
+    commits each batch id once and skips a replayed one, so the sinks are
+    exactly-once: a restart after the write but before the batch's
+    checkpoint commit does not append the rows a second time.
+  * obsreport accepted/sent counters -> a named ``observe`` ("sinks")
+    on the routed rows: per-batch per-sink counts in
+    ``StreamingQueryProgress.observedMetrics["sinks"]``, computed in the
+    write job itself.
 
 The stages are the SAME config as batch (``plans.pipeline.FLAGSHIP``,
 compiled by ``config_pipeline.build_from_config``), so stream sinks get
@@ -26,8 +28,9 @@ The one batch-only construct is the resource-context route (a window
 over conv_id); streaming restricts the routing table to log-context
 routes — the reference's routing connector is likewise per-record when
 run in `log` context (connector/routingconnector/logs.go:86-100). The
-per-stage ``observe`` counters are batch-only too: Spark rejects an
-``Observation`` on a streaming DataFrame.
+per-stage ``Lineage`` counters are batch-only: Spark rejects an
+``Observation`` object on a streaming DataFrame (a named ``observe``,
+as used for the sink counters, is accepted).
 
 No event-time watermark is used, mirroring the reference's
 processing-time-only semantics (SURVEY.md §2.8).
@@ -78,11 +81,11 @@ def run_to_sinks(
     *,
     flush_interval: float | None = None,
 ):
-    """Start the streaming job writing per-sink parquet + per-batch
-    metrics. foreachBatch gives the per-micro-batch hook the exporters
-    need (one partitionBy write per batch; append mode). Delivery is
-    at-least-once: a batch replayed after a crash before its commit is
-    appended again.
+    """Start the streaming job writing per-sink parquet to
+    ``{out_dir}/routed`` (partitioned by ``sink``, append mode) through
+    Spark's file sink, which makes delivery exactly-once across restarts
+    from ``checkpoint_dir``. The per-batch per-sink row counts arrive in
+    each progress event's ``observedMetrics["sinks"]``.
 
     ``flush_interval`` is the fileexporter's flush_interval config
     (exporter/fileexporter/config.go:49-52, seconds): data becomes
@@ -93,27 +96,15 @@ def run_to_sinks(
     tagged, sink_map = build_stream(
         spark, read_transcript_stream(spark, input_dir), sf_dir
     )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed = connectors.routed_union(batch_df, sink_map)
-        routed.persist()
-        try:
-            routed.write.mode("append").partitionBy("sink").parquet(
-                f"{out_dir}/routed"
-            )
-            # obsreport-style per-batch counters
-            (
-                routed.groupBy("sink")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(f"{out_dir}/metrics")
-            )
-        finally:
-            routed.unpersist()
-
+    routed = connectors.routed_union(tagged, sink_map)
+    sinks = sorted({s for ss in sink_map.values() for s in ss})
+    routed = routed.observe(
+        "sinks", *[F.count_if(F.col("sink") == s).alias(s) for s in sinks]
+    )
     writer = (
-        tagged.writeStream.foreachBatch(write_batch)
+        routed.writeStream.format("parquet")
+        .partitionBy("sink")
+        .option("path", f"{out_dir}/routed")
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )

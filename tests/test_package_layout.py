@@ -21,7 +21,6 @@ ENTRY_FILES = [
 
 # unreached on purpose; each reason cites the north rule
 KEEP_UNREACHED = {
-    "plans.checkpoint": "north rule: 'resumable from checkpoint' (stage resume)",
     "sources.catalog": "north rule: 'over Iceberg tables' (per-sink catalog tables)",
 }
 

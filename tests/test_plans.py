@@ -1,5 +1,4 @@
-"""plans/ layer: checkpoint resume, lineage counters, pipeline writes,
-routing."""
+"""plans/ layer: lineage counters, pipeline writes, routing."""
 
 from __future__ import annotations
 
@@ -13,10 +12,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from opentelemetry_collector_contrib_spark.operators import connectors  # noqa: E402
-from opentelemetry_collector_contrib_spark.plans import (  # noqa: E402
-    checkpoint as cp,
-    pipeline,
-)
+from opentelemetry_collector_contrib_spark.plans import pipeline  # noqa: E402
 from opentelemetry_collector_contrib_spark.sources import transcripts as src  # noqa: E402
 
 
@@ -27,23 +23,6 @@ def turns(spark, sf_dir):
     df = src.transcripts_df(spark, sf_dir).cache()
     yield df
     df.unpersist()
-
-
-def test_checkpoint_run_stage_skips_completed(spark, turns, tmp_path):
-    base = str(tmp_path)
-    calls = []
-
-    def build():
-        calls.append(1)
-        return turns.select("conv_id", "turn_idx")
-
-    out1 = cp.run_stage(spark, base, "stage1", build)
-    n = out1.count()
-    out2 = cp.run_stage(spark, base, "stage1", build)
-    assert out2.count() == n
-    assert len(calls) == 1  # second run resumed from the checkpoint
-    cp.run_stage(spark, base, "stage1", build, force=True)
-    assert len(calls) == 2  # force re-runs
 
 
 def test_lineage_counts_per_stage(spark, sf_dir, tmp_path):
@@ -364,24 +343,6 @@ def test_parse_pipeline_single_codegen_span(spark, sf_dir):
     assert "ArrowEvalPython" not in body and "BatchEvalPython" not in body
     # "*(n)" prefixes mark whole-stage-codegen spans in the plan string
     assert "*(1)" in body
-
-
-def test_write_stage_lineage_from_stored_files(spark, turns, tmp_path):
-    """with_lineage metrics come from re-reading the written parquet
-    (one cheap scan over stored files), and their totals match the data
-    actually persisted — including the error counter."""
-    base = str(tmp_path)
-    df = turns.select(
-        "conv_id", "turn_idx", (F.col("turn_idx") % 5 == 0).alias("is_err")
-    )
-    cp.write_stage(df, base, "st", with_lineage=True, error_col="is_err")
-    stored = cp.read_stage(spark, base, "st")
-    lin = spark.read.parquet(f"{base}/st._lineage")
-    rows = lin.collect()
-    assert all(r["stage"] == "st" for r in rows)
-    assert sum(r["rows"] for r in rows) == stored.count()
-    assert sum(r["errors"] for r in rows) == stored.filter("is_err").count()
-    assert cp.stage_done(base, "st")
 
 
 def test_count_connector_multi_single_scan(spark, turns):
